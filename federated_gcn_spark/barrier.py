@@ -1,4 +1,4 @@
-"""Iteration barrier: lineage + stats cut for driver-driven fixpoint loops.
+"""One barrier and one round loop for driver-driven fixpoints.
 
 Catalyst has no loop operator, so iterative algorithms (connected
 components, Borůvka spanning forest, pagerank, random walks, pointer
@@ -14,21 +14,51 @@ inside every stats-driven rule (join selection, runtime-filter
 injection) — the driver, not the cluster, becomes the bottleneck, at ANY
 data scale.
 
-``iteration_barrier`` therefore materializes the frame (eager
-localCheckpoint, same as before) and then re-wraps the checkpointed
-RDD[InternalRow] in a fresh ``LogicalRDD`` WITHOUT origin stats, so every
-superstep's plan starts from flat leaf estimates. The zero-copy path
-goes through ``SparkSession.internalCreateDataFrame`` (``private[sql]``,
-but Scala access modifiers don't survive to bytecode, so py4j can call
-it); if that internal API ever moves, the fallback round-trips through
-the public ``createDataFrame(RDD[Row], schema)`` (correct, costs one
-extra row conversion per downstream pass), and failing even that returns
-the plain checkpoint (correct, re-grows stats).
+``barrier`` therefore takes a lazy ``localCheckpoint`` and re-wraps the
+checkpointed RDD[InternalRow] in a fresh ``LogicalRDD`` WITHOUT origin
+stats, so every superstep's plan starts from flat leaf estimates. The
+zero-copy path goes through ``SparkSession.internalCreateDataFrame``
+(``private[sql]``, but Scala access modifiers don't survive to bytecode,
+so py4j can call it); if that internal API ever moves, the fallback
+round-trips through the public ``createDataFrame(RDD[Row], schema)``
+(correct, costs one extra row conversion per downstream pass), and
+failing even that returns the plain checkpoint (correct, re-grows
+stats). Each failed strategy is logged as a warning. Without probe
+columns no job runs (the checkpoint caches on first computation, inside
+whatever action consumes the chain); with them, one aggregate job both
+materializes the frame and computes the probe row.
+
+``rounds`` is the loop header: ``for i in rounds(name, cap): ...; if
+done: break``. An until-converged loop (the default) that runs out of
+rounds without a ``break`` raises :class:`NotConverged` — a capped
+fixpoint never returns a partial answer quietly. ``bounded=True``
+declares that the cap is part of the answer's definition (PageRank's
+supersteps, a hop radius, Luby's round budget), so running out is a
+normal exit. ``stats`` gets ``iterations`` and ``converged`` (left by
+``break``); each round's Spark jobs carry the description
+``"<name> round <i>"``, and the caller's description (never its job
+group) is restored after the loop.
 """
 
 from __future__ import annotations
 
+import logging
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
+
+__all__ = ["barrier", "rounds", "NotConverged"]
+_log = logging.getLogger(__name__)
+_DESCRIPTION = "spark.job.description"
+
+
+class NotConverged(RuntimeError):
+    """An until-converged loop used all ``max_rounds`` without a fixpoint."""
+
+    def __init__(self, name: str, max_rounds: int):
+        super().__init__(f"{name} did not converge within {max_rounds} rounds")
+        self.name = name
+        self.max_rounds = max_rounds
 
 
 def _rewrap_internal(ck: DataFrame, spark) -> DataFrame:
@@ -54,72 +84,46 @@ def _rewrap_public(ck: DataFrame, spark) -> DataFrame:
 _REWRAP_STRATEGIES = (_rewrap_internal, _rewrap_public)
 
 
-def iteration_barrier(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and cut BOTH lineage and carried statistics.
-
-    Use this instead of ``localCheckpoint`` for any DataFrame that feeds
-    the next iteration of a driver-side loop. For one-shot staging of a
-    reused intermediate, plain ``localCheckpoint`` is fine.
-    """
-    ck = df.localCheckpoint(eager=True)
-    spark = ck.sparkSession
-    for rewrap in _REWRAP_STRATEGIES:
+def _rewrap(ck: DataFrame) -> DataFrame:
+    for strategy in _REWRAP_STRATEGIES:
         try:
-            return rewrap(ck, spark)
-        except Exception:
-            continue
-    return ck  # correct but re-grows stats
+            return strategy(ck, ck.sparkSession)
+        except Exception as exc:
+            _log.warning("barrier: rewrap strategy %s failed (%s)",
+                         strategy.__name__, type(exc).__name__,
+                         exc_info=_log.isEnabledFor(logging.DEBUG))
+    _log.warning("barrier: no rewrap strategy left; stats re-grow per round")
+    return ck
 
 
-def agg_probed_barrier(df: DataFrame, *agg_cols):
-    """``iteration_barrier`` whose materializing action is an aggregate.
-
-    One driver job yields both the stats-cut frame and an arbitrary
-    probe over it (row count, changed-row count, convergence sum…), so
-    fixpoint loops don't pay a separate probe job per iteration on top
-    of the eager-checkpoint job.  The checkpoint is lazy; aggregating
-    the rewrapped frame runs through the checkpoint-marked RDD, which
-    materializes (and caches) it exactly like the eager path.
-
-    Returns ``(frame, Row)`` with the aggregate values.
-    """
-    ck = df.localCheckpoint(eager=False)
-    spark = ck.sparkSession
-    out = ck  # correct but re-grows stats (rewrap-failure fallback)
-    for rewrap in _REWRAP_STRATEGIES:
-        try:
-            out = rewrap(ck, spark)
-            break
-        except Exception:
-            continue
-    return out, out.agg(*agg_cols).collect()[0]
+def barrier(df: DataFrame, *probe):
+    """Cut lineage and carried statistics of ``df``: the lazily
+    checkpointed frame, or ``(frame, row)`` with ``probe`` columns."""
+    out = _rewrap(df.localCheckpoint(eager=False))
+    if not probe:
+        return out
+    return out, out.agg(*probe).collect()[0]
 
 
-def counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
-    """``agg_probed_barrier`` specialized to the row count."""
-    from pyspark.sql import functions as F
-
-    out, row = agg_probed_barrier(df, F.count(F.lit(1)).alias("n"))
-    return out, int(row["n"])
-
-
-def lazy_barrier(df: DataFrame) -> DataFrame:
-    """Lineage + stats cut WITHOUT a materializing action.
-
-    For fixed-round loops that never probe per-round state on the
-    driver: each round still gets a checkpoint-marked RDD behind a
-    fresh stats-free LogicalRDD (so plans stay flat and the optimizer's
-    size estimates don't compound), but materialization is deferred to
-    whatever action finally consumes the chain — the checkpoint caches
-    on first computation, so multiple consumers inside that one job
-    still compute each round once.  Collapses a loop's N barrier jobs
-    into the consumer's single job cascade.
-    """
-    ck = df.localCheckpoint(eager=False)
-    spark = ck.sparkSession
-    for rewrap in _REWRAP_STRATEGIES:
-        try:
-            return rewrap(ck, spark)
-        except Exception:
-            continue
-    return ck  # correct but re-grows stats
+def rounds(name: str, max_rounds: int, *, bounded: bool = False,
+           stats: dict | None = None):
+    """Yield 1..``max_rounds`` under an active SparkContext; see the
+    module docstring."""
+    sc = SparkContext._active_spark_context
+    outer = sc.getLocalProperty(_DESCRIPTION)
+    i, converged = 0, False
+    try:
+        for i in range(1, max_rounds + 1):
+            sc.setLocalProperty(_DESCRIPTION, f"{name} round {i}")
+            try:
+                yield i
+            except GeneratorExit:
+                converged = True
+                raise
+        if not bounded:
+            raise NotConverged(name, max_rounds)
+    finally:
+        if stats is not None:
+            stats["iterations"] = i
+            stats["converged"] = converged
+        sc.setLocalProperty(_DESCRIPTION, outer)

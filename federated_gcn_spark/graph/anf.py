@@ -23,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import (
-    agg_probed_barrier,
-    counted_barrier,
-    lazy_barrier,
-)
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
@@ -49,13 +45,13 @@ def neighborhood_function(
         .groupBy(ID)
         .agg(F.hll_sketch_agg(F.col(ID), F.lit(lg_k)).alias("sketch"))
     )
-    # the per-hop N(h) total rides each barrier's materialization job
-    # (agg_probed_barrier): one driver action per hop, not two
-    probe = F.sum(F.hll_sketch_estimate(F.col("sketch"))).alias("t")
-    cur, row = agg_probed_barrier(cur, probe)
+    # the per-hop N(h) total rides each probed barrier's materialization
+    # job: one driver action per hop, not two
+    probe = F.sum(F.hll_sketch_estimate(F.col("sketch")))
+    cur, (t,) = barrier(cur, probe)
 
-    rows = [(0, float(row["t"]))]
-    for hop in range(1, max_hops + 1):
+    rows = [(0, float(t))]
+    for hop in rounds("graph.anf.neighborhood_function", max_hops, bounded=True):
         msgs = edges.join(cur.withColumnRenamed(ID, SRC), SRC).select(
             F.col(DST).alias(ID), "sketch"
         )
@@ -64,8 +60,8 @@ def neighborhood_function(
             .groupBy(ID)
             .agg(F.hll_union_agg(F.col("sketch")).alias("sketch"))
         )
-        cur, row = agg_probed_barrier(nxt, probe)
-        rows.append((hop, float(row["t"])))
+        cur, (t,) = barrier(nxt, probe)
+        rows.append((hop, float(t)))
     return spark.createDataFrame(rows, "hop int, reachable_pairs double")
 
 
@@ -90,13 +86,15 @@ def exact_neighborhood_function(graph: Graph, max_hops: int = 6) -> DataFrame:
         F.col(ID).alias("origin"), F.col(ID).alias("reached")
     )
     # the per-hop pair count IS the barrier's materializing action
-    reach, n = counted_barrier(reach)
+    count = F.count(F.lit(1))
+    reach, (n,) = barrier(reach, count)
     rows = [(0, n)]
-    for hop in range(1, max_hops + 1):
+    for hop in rounds("graph.anf.exact_neighborhood_function", max_hops,
+                      bounded=True):
         step = reach.join(
             edges.withColumnRenamed(SRC, "reached"), "reached"
         ).select("origin", F.col(DST).alias("reached"))
-        reach, n = counted_barrier(reach.unionByName(step).distinct())
+        reach, (n,) = barrier(reach.unionByName(step).distinct(), count)
         rows.append((hop, n))
     return spark.createDataFrame(rows, "hop int, reachable_pairs bigint")
 
@@ -161,7 +159,7 @@ def register_anf(
     # materializes the whole chain — each hop's checkpoint caches on
     # first computation and is shared by its two consumers (the per-hop
     # summary and the next hop's merge), with zero per-hop driver jobs.
-    state = lazy_barrier(state)
+    state = barrier(state)
 
     def summary(df: DataFrame, hop: int) -> DataFrame:
         return df.agg(
@@ -176,7 +174,7 @@ def register_anf(
         msgs = edges.join(state.withColumnRenamed(ID, SRC), SRC).select(
             F.col(DST).alias(ID), "bucket", "mr"
         )
-        state = lazy_barrier(
+        state = barrier(
             msgs.unionByName(state).groupBy(ID, "bucket").agg(
                 F.max("mr").alias("mr")
             )

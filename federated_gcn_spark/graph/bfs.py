@@ -16,14 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import counted_barrier, iteration_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
 def bfs_distances(
     graph: Graph, source: int, max_hops: int = 50, undirected: bool = True
 ) -> DataFrame:
-    """(id, distance) for every vertex reachable from ``source``."""
+    """(id, distance) for every vertex reachable from ``source``;
+    ``NotConverged`` if the frontier is non-empty after ``max_hops``."""
     edges = (
         graph.symmetrized_edges() if undirected else graph.edges.select(SRC, DST)
     ).distinct().localCheckpoint(eager=True)
@@ -31,9 +32,10 @@ def bfs_distances(
     settled = graph.vertices.sparkSession.createDataFrame(
         [(int(source), 0)], f"{ID} long, distance int"
     )
-    settled = iteration_barrier(settled)
+    # lazy: the first hop's probed barrier job materializes it
+    settled = barrier(settled)
     frontier = settled
-    for hop in range(1, max_hops + 1):
+    for hop in rounds("graph.bfs.bfs_distances", max_hops):
         nxt = (
             frontier.join(edges, frontier[ID] == edges[SRC])
             .select(F.col(DST).alias(ID))
@@ -45,7 +47,7 @@ def bfs_distances(
         # the barrier materialization, and `settled` accumulates as a
         # lazy union of the already-materialized frontier frames (each a
         # flat checkpoint RDD — no recompute risk, no stats growth)
-        nxt, n = counted_barrier(nxt)
+        nxt, (n,) = barrier(nxt, F.count(F.lit(1)))
         if n == 0:
             break
         settled = settled.unionByName(nxt)
@@ -67,7 +69,7 @@ def multi_source_bfs(
     frontier at most once, so total shuffled rows are bounded by
     |sources| * |V| regardless of round count.  Intended for small
     source panels (centrality probes); for all-sources reachability use
-    graph/anf.py.
+    graph/anf.py.  ``max_hops`` is part of the answer (bounded loop).
     """
     edges = (
         graph.symmetrized_edges() if undirected else graph.edges.select(SRC, DST)
@@ -76,9 +78,9 @@ def multi_source_bfs(
     settled = sources.select(
         F.col(sources.columns[0]).cast("long").alias("origin")
     ).withColumn(ID, F.col("origin")).withColumn("distance", F.lit(0))
-    settled = iteration_barrier(settled)
+    settled = barrier(settled)  # lazy, as in bfs_distances
     frontier = settled
-    for hop in range(1, max_hops + 1):
+    for hop in rounds("graph.bfs.multi_source_bfs", max_hops, bounded=True):
         nxt = (
             frontier.join(edges, frontier[ID] == edges[SRC])
             .select("origin", F.col(DST).alias(ID))
@@ -86,7 +88,7 @@ def multi_source_bfs(
             .join(settled.select("origin", ID), ["origin", ID], "left_anti")
             .withColumn("distance", F.lit(hop))
         )
-        nxt, n = counted_barrier(nxt)
+        nxt, (n,) = barrier(nxt, F.count(F.lit(1)))
         if n == 0:
             break
         settled = settled.unionByName(nxt)

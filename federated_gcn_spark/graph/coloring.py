@@ -11,7 +11,7 @@ oracle (plans/queries_wave26._coloring_oracle).
 Spark shape: per layer, the induced subgraph is two semi-joins on the
 (checkpointed) edge list; per MIS round inside the layer, the same
 anti-join dominance step as ``luby_mis`` — all equi-joins on vertex id,
-lineage cut by ``iteration_barrier`` each round.  At 100 TB the edge
+lineage cut by a count-probed barrier each round.  At 100 TB the edge
 list shuffles once per (layer, round) on vertex id with map-side
 combine; no vertex-pair blowup anywhere.
 
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import counted_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
@@ -43,17 +43,20 @@ def luby_coloring(
     coverage.  Each layer runs ``rounds_per_color`` Luby rounds with
     priority xxhash64(id, seed + color): running a round past
     convergence is a no-op, so a fixed unroll and an early-exit loop
-    agree — the invariant the SQL oracle replay depends on.
+    agree — the invariant the SQL oracle replay depends on.  Both
+    budgets are part of the answer (bounded loops).
     """
     edges = graph.symmetrized_edges().select(SRC, DST).distinct()
     edges = edges.localCheckpoint(eager=True)
 
-    remaining, n_remaining = counted_barrier(graph.vertices.select(ID))
+    count = F.count(F.lit(1))
+    remaining, (n_remaining,) = barrier(graph.vertices.select(ID), count)
     colored_layers: list[DataFrame] = []
 
-    for color in range(n_colors):
+    for layer in rounds("graph.coloring.luby_coloring", n_colors, bounded=True):
         if n_remaining == 0:
             break  # nothing left to color: later layers are no-ops
+        color = layer - 1
         layer_seed = seed + color
 
         def pri(col):
@@ -77,10 +80,11 @@ def luby_coloring(
         # pure no-op (empty dominated → empty winners → unchanged
         # state), so breaking is output-identical to the fixed unroll —
         # the same invariant the SQL oracle replay depends on.
-        for rnd in range(rounds_per_color):
-            # round 0's emptiness is covered by the layer-start check
+        for rnd in rounds("graph.coloring.luby_coloring.mis", rounds_per_color,
+                          bounded=True):
+            # round 1's emptiness is covered by the layer-start check
             # (active is exactly `remaining` there).
-            if rnd > 0 and n_active == 0:
+            if rnd > 1 and n_active == 0:
                 break
             act_e = edges.join(
                 active.withColumnRenamed(ID, SRC), SRC, "left_semi"
@@ -107,10 +111,11 @@ def luby_coloring(
             # staged `dominated` with a semi-join instead of re-joining
             # against winners — same sets, and the whole round chains
             # into the single counted barrier below.
-            active, n_active = counted_barrier(
+            active, (n_active,) = barrier(
                 active.join(dominated, ID, "left_semi").join(
                     losers, ID, "left_anti"
-                )
+                ),
+                count,
             )
         if not round_winners:  # rounds_per_color=0: layer colors nothing
             continue
@@ -130,8 +135,8 @@ def luby_coloring(
                 eager=False
             )
         else:
-            remaining, n_remaining = counted_barrier(
-                remaining.join(taken, ID, "left_anti")
+            remaining, (n_remaining,) = barrier(
+                remaining.join(taken, ID, "left_anti"), count
             )
 
     leftover = remaining.withColumn("color", F.lit(-1))

@@ -19,8 +19,8 @@ O(log n) rounds on any graph — including high-diameter chains where
 plain min-label propagation needs O(diameter) supersteps (the previous
 implementation here, replaced per VERDICT r01 item 3). Each round is two
 groupBy/join shuffles keyed by vertex; lineage is cut per round with
-localCheckpoint (SURVEY.md §4.2 — Catalyst has no loop operator, the
-driver drives). Convergence is detected with an order-insensitive
+the stats-cut barrier (SURVEY.md §4.2 — Catalyst has no loop operator,
+the driver drives). Convergence is detected with an order-insensitive
 (count, hash-sum) snapshot of the edge set — one tiny aggregate per
 round, no driver-side edge collection.
 """
@@ -30,27 +30,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import agg_probed_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
+
 
 def _snapshot_probe():
     """Order-insensitive (n, bit_xor-hash) edge-set fingerprint, as an
     aggregate probe that rides each round's barrier materialization
-    job (built lazily: Columns need an active session)."""
+    job (built lazily: Columns need an active session). bit_xor is
+    order-insensitive and overflow-free (ANSI-safe, unlike sum)."""
     return (
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
     )
-
-
-def _edge_snapshot(e: DataFrame) -> tuple[int, int]:
-    """Order-insensitive fingerprint of an (u, v) edge set: one aggregate."""
-    # bit_xor: order-insensitive and overflow-free (ANSI-safe, unlike sum)
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"])
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -94,30 +86,26 @@ def connected_components(
     Deterministic: the fixpoint (star forest rooted at component minima)
     is unique regardless of partitioning. ``stats``, when passed, gets
     ``stats["iterations"]`` — the number of large+small-star rounds run
-    (tests assert O(log n) on a path graph).
+    (tests assert O(log n) on a path graph) — and ``stats["converged"]``.
+    Raises ``NotConverged`` if ``max_iterations`` rounds do not reach
+    the fixpoint.
     """
-    e = (
+    # stats-cut barriers, not localCheckpoint: e joins itself every
+    # round, so carried stats would square per round (barrier.py); the
+    # convergence fingerprint is an aggregate of the same job
+    e, prev = barrier(
         graph.edges.select(F.col(SRC).alias("u"), F.col(DST).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        *_snapshot_probe(),
     )
-    prev = _edge_snapshot(e)
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
-        # stats-cut barrier, not localCheckpoint: e joins itself next
-        # round, so carried stats would square per round (barrier.py);
-        # the convergence fingerprint is an aggregate of the same job
-        e, row = agg_probed_barrier(
-            _small_star(_large_star(e)), *_snapshot_probe()
-        )
-        cur = (int(row["n"]), int(row["h"]))
+    for _ in rounds(
+        "graph.components.connected_components", max_iterations, stats=stats
+    ):
+        e, cur = barrier(_small_star(_large_star(e)), *_snapshot_probe())
         if cur == prev:
             break
         prev = cur
-    if stats is not None:
-        stats["iterations"] = iterations
 
     # star edges point non-roots at their component min; roots + isolated
     # vertices label themselves

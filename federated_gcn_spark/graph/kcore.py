@@ -19,9 +19,10 @@ most deg(v) distinct values, then max(min(value, count_ge)) — never a
 collect_list of neighbor values, so a hub vertex costs rows proportional
 to its distinct neighbor-value count, not an in-memory array of degree
 length. Two shuffles per round (message join + histogram agg); lineage
-cut per round with iteration_barrier. Convergence = sum(c) unchanged
-(the sum strictly decreases until the fixpoint — one tiny aggregate per
-round, no driver-side vertex collection).
+and carried stats cut per round by the barrier, whose materializing
+job also computes the convergence probe sum(c): unchanged means done
+(the sum strictly decreases until the fixpoint — no driver-side vertex
+collection). Both loops raise ``NotConverged`` at their round cap.
 
 ``k_core`` peels directly: repeatedly delete vertices with degree < k.
 Rounds are bounded by the peeling depth, each round one degree aggregate
@@ -33,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import agg_probed_barrier, counted_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
@@ -51,14 +52,10 @@ def core_numbers(
     )
     cur = deg.select(ID, F.col("deg").cast("long").alias("c"))
     # the coreness-sum convergence probe rides each round's barrier
-    # materialization job (agg_probed_barrier) instead of a separate
-    # collect per round — 2 driver actions per round fold into 1
-    cur, row = agg_probed_barrier(cur, F.sum("c").alias("s"))
-    prev_sum = row["s"]
+    # materialization job instead of a separate collect per round
+    cur, (prev_sum,) = barrier(cur, F.sum("c"))
 
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
+    for _ in rounds("graph.kcore.core_numbers", max_iterations, stats=stats):
         # neighbor messages: to v, each u contributes c(u). (Clamping by
         # deg(v) as in the paper is a no-op here: values >= h count the
         # same either way and h <= deg(v) always — so skip that join.)
@@ -79,21 +76,18 @@ def core_numbers(
             .groupBy(ID)
             .agg(F.max(F.least(F.col("val"), F.col("n_ge"))).alias("c"))
         )
-        cur, row = agg_probed_barrier(nxt, F.sum("c").alias("s"))
-        cur_sum = row["s"]
+        cur, (cur_sum,) = barrier(nxt, F.sum("c"))
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    if stats is not None:
-        stats["iterations"] = iterations
     return cur.select(ID, F.col("c").alias("coreness"))
 
 
 def k_core(graph: Graph, k: int, max_iterations: int = 100) -> Graph:
     """The maximal subgraph where every vertex has (undirected) degree >= k."""
     edges = graph.symmetrized_edges().select(SRC, DST).distinct()
-    edges, n_prev = counted_barrier(edges)
-    for _ in range(max_iterations):
+    edges, (n_prev,) = barrier(edges, F.count(F.lit(1)))
+    for _ in rounds("graph.kcore.k_core", max_iterations):
         deg = edges.groupBy(F.col(SRC).alias(ID)).agg(
             F.count(F.lit(1)).alias("deg")
         )
@@ -102,7 +96,7 @@ def k_core(graph: Graph, k: int, max_iterations: int = 100) -> Graph:
             edges.join(survivors.withColumnRenamed(ID, SRC), SRC, "left_semi")
             .join(survivors.withColumnRenamed(ID, DST), DST, "left_semi")
         )
-        edges, n_now = counted_barrier(pruned)
+        edges, (n_now,) = barrier(pruned, F.count(F.lit(1)))
         if n_now == n_prev:
             break
         n_prev = n_now

@@ -23,22 +23,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import agg_probed_barrier, iteration_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
-def label_propagation(graph: Graph, max_iterations: int = 10) -> DataFrame:
+def label_propagation(
+    graph: Graph, max_iterations: int = 10, stats: dict | None = None
+) -> DataFrame:
     """(id, community) — community = converged label (min label of the
-    community under the deterministic tie-break)."""
+    community under the deterministic tie-break). A bounded loop: a
+    capped run returns the labelling after ``max_iterations`` supersteps,
+    and ``stats`` (when passed) gets ``iterations`` and ``converged``."""
     edges = graph.symmetrized_edges().select(SRC, DST).distinct()
     edges = edges.localCheckpoint(eager=True)  # reused every superstep
 
     labels = edges.select(F.col(SRC).alias(ID)).distinct().withColumn(
         "label", F.col(ID)
     )
-    labels = iteration_barrier(labels)
+    # lazy: the first superstep's probed barrier job materializes it
+    labels = barrier(labels)
 
-    for _ in range(max_iterations):
+    for _ in rounds("graph.labelprop.label_propagation", max_iterations,
+                    bounded=True, stats=stats):
         neighbor_votes = edges.join(
             labels.withColumnRenamed(ID, SRC), SRC
         ).select(F.col(DST).alias(ID), "label")
@@ -53,13 +59,11 @@ def label_propagation(graph: Graph, max_iterations: int = 10) -> DataFrame:
         # carry the previous label on the new state so the convergence
         # count is an aggregate of the materializing job itself (the
         # join replaces the old separate changed-probe join+count)
-        nxt2, row = agg_probed_barrier(
+        nxt2, (changed,) = barrier(
             nxt.join(labels.select(ID, F.col("label").alias("prev")), ID),
-            F.sum((F.col("label") != F.col("prev")).cast("long")).alias(
-                "changed"
-            ),
+            F.sum((F.col("label") != F.col("prev")).cast("long")),
         )
         labels = nxt2.select(ID, "label")
-        if int(row["changed"] or 0) == 0:
+        if not changed:
             break
     return labels.select(ID, F.col("label").alias("community"))

@@ -24,13 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import counted_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
 def luby_mis(graph: Graph, max_rounds: int = 8, seed: int = 42) -> DataFrame:
     """(id,) — the members of a maximal independent set of the
-    UNDIRECTED graph (edges are symmetrized)."""
+    UNDIRECTED graph (edges are symmetrized); ``max_rounds`` bounded."""
     edges = graph.symmetrized_edges().select(SRC, DST).distinct()
     edges = edges.localCheckpoint(eager=True)
 
@@ -40,7 +40,8 @@ def luby_mis(graph: Graph, max_rounds: int = 8, seed: int = 42) -> DataFrame:
             F.col(col).alias("i"),
         )
 
-    active, n_active = counted_barrier(graph.vertices.select(ID))
+    count = F.count(F.lit(1))
+    active, (n_active,) = barrier(graph.vertices.select(ID), count)
     # ONE driver action per round (the luby_coloring r11 shape): only
     # `active` is barriered, its counted materialization steers the
     # early exit, and the round's shared intermediates — `dominated`
@@ -50,7 +51,7 @@ def luby_mis(graph: Graph, max_rounds: int = 8, seed: int = 42) -> DataFrame:
     # The dup-insensitive semi/anti-join inputs skip their distinct
     # (per-round cost is scheduling latency, ~flat in data).
     round_winners: list[DataFrame] = []
-    for _ in range(max_rounds):
+    for _ in rounds("graph.mis.luby_mis", max_rounds, bounded=True):
         if n_active == 0:
             break
         act_e = (
@@ -74,10 +75,11 @@ def luby_mis(graph: Graph, max_rounds: int = 8, seed: int = 42) -> DataFrame:
         losers = edges.join(
             winners.withColumnRenamed(ID, SRC), SRC, "left_semi"
         ).select(F.col(DST).alias(ID))
-        active, n_active = counted_barrier(
+        active, (n_active,) = barrier(
             active.join(dominated, ID, "left_semi").join(
                 losers, ID, "left_anti"
-            )
+            ),
+            count,
         )
     if not round_winners:  # empty graph: no rounds ran
         return graph.vertices.sparkSession.createDataFrame(

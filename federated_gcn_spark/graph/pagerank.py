@@ -16,18 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import agg_probed_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
 def _dangling_probe():
     """The dangling-mass reduction, as an aggregate probe that rides
-    each superstep's barrier materialization job (agg_probed_barrier)
-    instead of a separate collect per superstep — 2 driver actions per
-    superstep fold into 1.  Built lazily: Columns need a session."""
-    return F.sum(
-        F.when(F.col("out_degree") == 0, F.col("rank"))
-    ).alias("dm")
+    each superstep's barrier materialization job instead of a separate
+    collect per superstep — 2 driver actions per superstep fold into 1.
+    Built lazily: Columns need a session."""
+    return F.sum(F.when(F.col("out_degree") == 0, F.col("rank")))
 
 
 def pagerank(
@@ -35,7 +33,8 @@ def pagerank(
     damping: float = 0.85,
     max_iterations: int = 10,
 ) -> DataFrame:
-    """Return (id, rank) after ``max_iterations`` synchronous supersteps.
+    """Return (id, rank) after ``max_iterations`` synchronous supersteps
+    (a bounded loop: the superstep count is part of the answer).
 
     rank_v = (1-d)/N + d·(Σ_{u→v} rank_u/outdeg_u + dangling_mass/N)
     """
@@ -56,12 +55,12 @@ def pagerank(
     )
     edges = edges.localCheckpoint(eager=True)
 
-    ranks, row = agg_probed_barrier(
+    ranks, (dm,) = barrier(
         degrees.select(ID, F.lit(1.0 / n).alias("rank"), "out_degree"),
         _dangling_probe(),
     )
-    for _ in range(max_iterations):
-        dangling_mass = float(row["dm"] or 0.0)
+    for _ in rounds("graph.pagerank.pagerank", max_iterations, bounded=True):
+        dangling_mass = float(dm or 0.0)
         contribs = (
             ranks.where(F.col("out_degree") > 0)
             .join(edges, ranks[ID] == edges[SRC])
@@ -75,7 +74,7 @@ def pagerank(
         base = (1.0 - damping) / n + damping * dangling_mass / n
         # barrier: ranks feeds next superstep's join — carried stats
         # would compound across supersteps (see barrier.py)
-        ranks, row = agg_probed_barrier(
+        ranks, (dm,) = barrier(
             degrees.join(contribs, ID, "left")
             .select(
                 ID,
@@ -128,14 +127,15 @@ def personalized_pagerank(
     )
     edges = edges.localCheckpoint(eager=True)
 
-    ranks, row = agg_probed_barrier(
+    ranks, (dm,) = barrier(
         degrees.select(
             ID, F.col("tele").alias("rank"), "out_degree", "tele"
         ),
         _dangling_probe(),
     )
-    for _ in range(max_iterations):
-        dangling_mass = float(row["dm"] or 0.0)
+    for _ in rounds("graph.pagerank.personalized_pagerank", max_iterations,
+                    bounded=True):
+        dangling_mass = float(dm or 0.0)
         contribs = (
             ranks.where(F.col("out_degree") > 0)
             .join(edges, ranks[ID] == edges[SRC])
@@ -146,7 +146,7 @@ def personalized_pagerank(
             .groupBy(ID)
             .agg(F.sum("contrib").alias("contrib"))
         )
-        ranks, row = agg_probed_barrier(
+        ranks, (dm,) = barrier(
             degrees.join(contribs, ID, "left")
             .select(
                 ID,

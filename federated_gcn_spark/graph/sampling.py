@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import lazy_barrier
+from federated_gcn_spark.barrier import barrier
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
@@ -75,7 +75,7 @@ def uniform_random_walks(
         # probe, so materialization defers to the caller's one action
         # (each step caches on first computation, shared by the walk
         # accumulator and the next step's join)
-        picked = lazy_barrier(
+        picked = barrier(
             cand.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .select("walk_id", "start", F.col("next_vertex").alias("vertex"))
@@ -164,7 +164,7 @@ def fanout_sample(
             ),
             F.col("child"),
         )
-        picked = lazy_barrier(
+        picked = barrier(
             cand.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") <= k)
             .select("root", "parent", F.col("child").alias("vertex"), *gcols)
@@ -251,7 +251,7 @@ def node2vec_walks(
         w = Window.partitionBy("walk_id").orderBy(
             (-F.log(_u(step)) / F.col("__w")).asc(), F.col("next_vertex")
         )
-        picked = lazy_barrier(
+        picked = barrier(
             weighted.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .select(

@@ -29,11 +29,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import (
-    agg_probed_barrier,
-    counted_barrier,
-    lazy_barrier,
-)
+from federated_gcn_spark.barrier import barrier, rounds
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
 
@@ -98,7 +94,8 @@ def spanning_forest(
 
     Returns tree edges as (src, dst) in the *stored* edge orientation (so
     they can be anti-joined against graph.edges). ``stats``, when passed,
-    receives ``rounds`` and ``pointer_jumps``.
+    receives ``rounds`` and ``pointer_jumps``. Raises ``NotConverged`` if
+    cross edges remain after ``max_rounds`` rounds.
     """
     e = (
         graph.edges.select(SRC, DST)
@@ -109,36 +106,27 @@ def spanning_forest(
     )
     labels = graph.vertices.select(ID, F.col(ID).alias("comp"))
     forest = None
-    rounds = 0
     total_jumps = 0
-
-    def _pair_probe(a: str, b: str):
-        # the fingerprint as an aggregate probe riding a barrier job
-        return F.coalesce(
-            F.expr(f"bit_xor(xxhash64({a}, {b}))"), F.lit(0)
-        ).alias("h")
-
-    for _ in range(max_rounds):
-        # Loop state crosses rounds through stats-cut barriers (carried
-        # size stats would square per superstep — see barrier.py), but
-        # only TWO driver actions run per round: the counted cross-edge
-        # barrier (whose count is the emptiness probe) and each
-        # pointer-jump's fingerprint-probed barrier.  Everything else —
-        # picks, the forest accumulator, labels — is lazy and
-        # materializes inside those jobs (picks in the hooking
-        # barrier's, labels in the next round's cross-edge job).
-        el, n_cross = counted_barrier(
+    # Loop state crosses rounds through stats-cut barriers (carried size
+    # stats would square per superstep — see barrier.py), but only the
+    # probed barriers run driver actions: the cross-edge count (the
+    # emptiness probe), the hooking graph and each pointer jump.
+    # Everything else — picks, the forest accumulator, labels — is lazy
+    # and materializes inside those jobs (picks in the hooking barrier's,
+    # labels in the next round's cross-edge job).
+    for rnd in rounds("graph.split.spanning_forest", max_rounds):
+        el, (n_cross,) = barrier(
             e.join(labels.select(F.col(ID).alias(SRC), F.col("comp").alias("cs")), SRC)
             .join(labels.select(F.col(ID).alias(DST), F.col("comp").alias("cd")), DST)
-            .where(F.col("cs") != F.col("cd"))
+            .where(F.col("cs") != F.col("cd")),
+            F.count(F.lit(1)),
         )
         if n_cross == 0:
             break
-        rounds += 1
         # min-weight cross edge per component (struct min = lexicographic:
         # weight first, then (src, dst) as the deterministic tiebreak)
         pick = F.struct(F.col("__w"), F.col(SRC), F.col(DST), F.col("cs"), F.col("cd"))
-        picks = lazy_barrier(
+        picks = barrier(
             el.select(F.col("cs").alias("comp"), pick.alias("p"))
             .unionByName(el.select(F.col("cd").alias("comp"), pick.alias("p")))
             .groupBy("comp")
@@ -156,7 +144,8 @@ def spanning_forest(
             .otherwise(F.col("cs"))
             .alias("to"),
         )
-        p, row = agg_probed_barrier(
+        # eager (its count is unused): every jump reads p on both sides
+        p, _ = barrier(
             hooks.alias("x")
             .join(hooks.alias("y"), F.col("x.to") == F.col("y.comp"), "left")
             .select(
@@ -169,34 +158,37 @@ def spanning_forest(
                 .otherwise(F.col("x.to"))
                 .alias("to"),
             ),
-            _pair_probe("comp", "to"),
+            F.count(F.lit(1)),
         )
-        # pointer-jump to the root: to := to.to until fixpoint (O(log depth))
-        prev = int(row["h"])
-        while True:
-            total_jumps += 1
-            p, row = agg_probed_barrier(
-                p.alias("x")
-                .join(
+        # pointer-jump to the root: to := to.to until no pointer moves.
+        # Depth halves per jump, so 64-bit ids cannot need 64 jumps.
+        for jump in rounds("graph.split.pointer_jump", 64):
+            p, (moved,) = barrier(
+                p.join(
                     p.select(F.col("comp").alias("to"), F.col("to").alias("to2")),
                     "to",
                     "left",
-                )
-                .select("comp", F.coalesce("to2", "to").alias("to")),
-                _pair_probe("comp", "to"),
+                ).select(
+                    "comp",
+                    F.coalesce("to2", "to").alias("to"),
+                    (F.col("to2").isNotNull() & (F.col("to2") != F.col("to")))
+                    .cast("long")
+                    .alias("moved"),
+                ),
+                F.sum("moved"),
             )
-            cur = int(row["h"])
-            if cur == prev:
+            if not moved:
                 break
-            prev = cur
-        labels = lazy_barrier(
+        total_jumps += jump
+        p = p.select("comp", "to")
+        labels = barrier(
             labels.join(p, labels["comp"] == p["comp"], "left")
             .select(ID, F.coalesce(p["to"], labels["comp"]).alias("comp"))
         )
         # only cross edges can matter in later rounds
         e = el.select(SRC, DST, "__w")
     if stats is not None:
-        stats["rounds"] = rounds
+        stats["rounds"] = rnd - 1  # the last round only found no cross edge
         stats["pointer_jumps"] = total_jumps
     if forest is None:
         return graph.edges.select(SRC, DST).limit(0)

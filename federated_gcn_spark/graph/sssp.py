@@ -15,7 +15,7 @@ Scale shape: per superstep, one equi-join of the distance table against
 the edge list (shuffle keyed on vertex id, reusable across supersteps
 since both sides keep the same key) and one map-side-combined MIN
 aggregate.  State is O(|reached V|) rows; lineage is cut per superstep
-(iteration_barrier) like every other fixpoint in graph/.  Unlike BFS,
+by the barrier like every other fixpoint in graph/.  Unlike BFS,
 vertices can re-enter the frontier when a cheaper path arrives — the
 cost of weights; with non-negative weights a delta-stepping refinement
 would shrink re-expansions, noted as the scale-up lever.
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import agg_probed_barrier, iteration_barrier
+from federated_gcn_spark.barrier import barrier, rounds
 
 
 def sssp(
@@ -42,7 +42,8 @@ def sssp(
 ) -> DataFrame:
     """(id, dist) for every vertex reachable from ``source`` within
     ``max_iters`` edge relaxations.  ``edges`` must already have the
-    desired orientation (pass a symmetrized list for undirected)."""
+    desired orientation (pass a symmetrized list for undirected);
+    ``max_iters`` is part of the answer (bounded loop)."""
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -51,8 +52,8 @@ def sssp(
 
     spark = edges.sparkSession
     dist = spark.createDataFrame([(int(source), 0)], "id long, dist long")
-    dist = iteration_barrier(dist)
-    for _ in range(max_iters):
+    dist = barrier(dist)  # lazy: the first relaxation's job materializes it
+    for _ in rounds("graph.sssp.sssp", max_iters, bounded=True):
         cand = e.join(dist, e.src == dist.id).select(
             F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist")
         )
@@ -65,7 +66,7 @@ def sssp(
         # the previous distance rides the new state so the convergence
         # count is an aggregate of the SAME job that materializes the
         # relaxation (1 driver action per iteration, not 2)
-        nxt2, row = agg_probed_barrier(
+        nxt2, (changed,) = barrier(
             nxt.join(
                 dist.withColumnRenamed("dist", "old"), "id", "left"
             ),
@@ -73,9 +74,9 @@ def sssp(
                 (
                     F.col("old").isNull() | (F.col("dist") < F.col("old"))
                 ).cast("long")
-            ).alias("changed"),
+            ),
         )
         dist = nxt2.select("id", "dist")
-        if int(row["changed"] or 0) == 0:
+        if not changed:
             break
     return dist

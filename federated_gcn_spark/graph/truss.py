@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from federated_gcn_spark.barrier import rounds
 from federated_gcn_spark.graph.triangles import (
     _oriented_wedge_triangles,
     oriented_by_degree,
@@ -219,19 +220,21 @@ def _decrement_round(state: DataFrame, k: int) -> DataFrame:
 
 
 def k_truss(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
-    """Early-exit k-truss: canonical (a, b) edges of the k-truss subgraph."""
+    """Early-exit k-truss: canonical (a, b) edges of the k-truss subgraph;
+    ``NotConverged`` if an edge is still weak after ``max_rounds`` peels."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
     if max_rounds < 1:
         return undirected_edges(edges)
     cur = undirected_edges(edges).localCheckpoint()
-    state = _first_round(cur, k).localCheckpoint()
-    for _ in range(max_rounds - 1):
+    state = None
+    for _ in rounds("graph.truss.k_truss", max_rounds):
+        peel = _first_round(cur, k) if state is None else _decrement_round(state, k)
+        state = peel.localCheckpoint()
         # the dead count is a filter over the checkpointed state — one
         # cheap scan decides convergence BEFORE paying a delta round
         if state.where(F.col("s") < k - 2).limit(1).count() == 0:
             break
-        state = _decrement_round(state, k).localCheckpoint()
     return state.select("a", "b")
 
 
@@ -275,13 +278,15 @@ def ktruss_trace(
             continue
         nxt = _decrement_round(state, k).localCheckpoint(eager=False)
 
-        def _probe(frame: DataFrame) -> DataFrame:
+        def _probe(frame: DataFrame, tag: int) -> DataFrame:
             return frame.agg(
+                F.lit(tag).alias("tag"),
                 F.count(F.lit(1)).alias("n"),
                 F.sum((F.col("s") < F.lit(k - 2)).cast("long")).alias("w"),
             )
 
-        rows = _probe(state).unionAll(_probe(nxt)).collect()
+        # the literal tag, not the union's row order, tells rounds apart
+        rows = {r["tag"]: r for r in _probe(state, 0).unionAll(_probe(nxt, 1)).collect()}
         counts.append(int(rows[0]["n"]))
         counts.append(int(rows[1]["n"]))
         converged = int(rows[1]["w"] or 0) == 0

@@ -122,7 +122,7 @@ def eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference anchor: SURVEY §2.7 (graph/pagerank.py's superstep
     machinery with the damping replaced by pure A-multiplication)."""
-    from federated_gcn_spark.barrier import lazy_barrier
+    from federated_gcn_spark.barrier import barrier
     from federated_gcn_spark.graph import Graph
 
     edges = _edges_mod10(spark, sf_dir)
@@ -143,7 +143,7 @@ def eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain (each superstep caches on first computation and is shared by
     # its consumers — the next superstep, the norm, and the Rayleigh
     # quotient) with zero per-step driver jobs
-    x = lazy_barrier(x)
+    x = barrier(x)
     prev = x
     for _ in range(6):
         prev = x
@@ -153,7 +153,7 @@ def eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("v").cast("decimal(38,0)").alias("v"))
             .select(F.col("id2").alias("id"), "v")
         )
-        x = lazy_barrier(x)
+        x = barrier(x)
     norm = x.agg(F.max("v").alias("mx"))
     rq = (
         prev.alias("a")

@@ -105,18 +105,13 @@ def _transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _step_col(pi_col, prob_col):
-    """one power-iteration term, 12-dp-rounded for exact summation."""
-    return F.round(pi_col * prob_col, 12).cast("decimal(24,12)")
-
-
 # ---------------------------------------------------------------------------
 # Dense-array chain machinery
 #
 # After the one LEAD shuffle the chain is a vocabulary-bounded matrix, so
 # (power_iteration_top_pc's lesson) the supersteps run as chained narrow
 # array expressions over a SINGLE-ROW frame — zero shuffles, zero per-step
-# driver jobs — instead of per-step join-aggs + iteration_barrier (measured:
+# driver jobs — instead of per-step join-aggs + per-step barriers (measured:
 # the barriered spelling costs ~0.25 s/step of pure scheduling at ANY data
 # size; the whole 20-step recursion below executes in one task).
 #
@@ -158,7 +153,7 @@ def _dense_chain(trans: DataFrame):
 
 def _dot12(a, b):
     """sum_j round(a[j]*b[j], 12) as exact DECIMAL(24,12) -> double —
-    the array form of the _step_col group sum (order-free)."""
+    the array form of the sparse join-agg group sum (order-free)."""
     return F.aggregate(
         F.zip_with(
             a, b, lambda x, y: F.round(x * y, 12).cast("decimal(24,12)")
@@ -197,30 +192,6 @@ def _reach_step(pres: list, ex: list) -> list:
     return [
         any(pres[i] and ex[i][j] for i in range(k)) for j in range(k)
     ]
-
-
-def _iterate_pi(spark, trans: DataFrame, pi: DataFrame, steps: int):
-    """pi_{t+1}(j) = sum_i pi_t(i) P(i,j), terms rounded to 12 dp.
-
-    Fixed step count, no driver probe: lazy stats-cut barriers defer
-    every step to the caller's single action (the k-state frames cache
-    on first computation), so the power iteration costs zero per-step
-    driver jobs."""
-    from federated_gcn_spark.barrier import lazy_barrier
-
-    for _ in range(steps):
-        pi = (
-            trans.join(pi, trans.from_type == pi.s)
-            .groupBy(F.col("to_type").alias("s2"))
-            .agg(
-                F.sum(_step_col(F.col("pi"), F.col("prob")))
-                .cast("double")
-                .alias("pi")
-            )
-            .select(F.col("s2").alias("s"), "pi")
-        )
-        pi = lazy_barrier(pi)
-    return pi
 
 
 def _stationary_oracle(steps: int) -> str:

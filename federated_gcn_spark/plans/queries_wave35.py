@@ -267,7 +267,7 @@ def esd_outlier_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer deviation |n*x - S| (day tie-break) — never a sort.
     Determinism: argmax compares exact DECIMAL integers; R_i is one
     fixed expression per round."""
-    from federated_gcn_spark.barrier import lazy_barrier
+    from federated_gcn_spark.barrier import barrier
 
     orders = load_table(spark, sf_dir, "orders", parallel=True)
     rem = orders.groupBy(
@@ -280,7 +280,7 @@ def esd_outlier_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the query's single final action — each round's rem/pick caches on
     # first computation and is shared by its 2-3 consumers.  Zero
     # per-round driver jobs.
-    rem = lazy_barrier(rem)
+    rem = barrier(rem)
     out = None
     for i in range(1, _ESD_ROUNDS + 1):
         st = rem.agg(
@@ -313,7 +313,7 @@ def esd_outlier_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("r_stat"),
         )
         out = row if out is None else out.unionByName(row)
-        rem = lazy_barrier(
+        rem = barrier(
             rem.join(pick.select("day"), "day", "left_anti")
         )
     return out.orderBy("round")

@@ -116,7 +116,7 @@ def handshake_matching_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed with map-side combine; lineage cut per round.
     Determinism: proposals order by (xxhash64(neighbor), neighbor);
     the oracle replays every round."""
-    from federated_gcn_spark.barrier import iteration_barrier
+    from federated_gcn_spark.barrier import barrier
     from federated_gcn_spark.graph import Graph
     from federated_gcn_spark.plans.queries import _edges_mod50
     from pyspark.sql import Window
@@ -129,9 +129,10 @@ def handshake_matching_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    free = iteration_barrier(
-        sym.select(F.col("src").alias("id")).distinct()
-    )
+    # eager barriers (the count is unused): each round's lazy
+    # checkpoints materialize inside its `free` job, below
+    count = F.count(F.lit(1))
+    free, _ = barrier(sym.select(F.col("src").alias("id")).distinct(), count)
     out = None
     total = 0  # driver-side running count is NOT used; kept distributed
     cum = None
@@ -175,7 +176,7 @@ def handshake_matching_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(marry.select(F.col("bb").alias("id")))
             .distinct()
         )
-        free = iteration_barrier(free.join(gone, "id", "left_anti"))
+        free, _ = barrier(free.join(gone, "id", "left_anti"), count)
     from pyspark.sql import Window as W2
 
     wc = W2.orderBy("round")

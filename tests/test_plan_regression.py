@@ -241,7 +241,7 @@ PLAN_BUDGET = {
     "bartlett_test": (3, 0),
     "tukey_hsd_pairs": (4, 0),
     # round-4 wave 26.  eigenvector/coloring loop bodies are cut by
-    # iteration_barrier (static counts low); clustering_null_model's 8
+    # stats-cut barriers (static counts low); clustering_null_model's 8
     # SMJs are the triangle census's edge-edge joins — the correct
     # at-scale join for stat-less checkpointed inputs.
     "eigenvector_centrality": (6, 1),
@@ -285,7 +285,7 @@ PLAN_BUDGET = {
     "mood_median_test": (1, 0),
     "atkinson_index_binned": (4, 0),
     # round-4 wave 33 (vocabulary-bounded Markov supersteps; loop
-    # bodies cut by iteration_barrier; mixing's 8 TV points each
+    # bodies cut by stats-cut barriers; mixing's 8 TV points each
     # broadcast-join the bounded stationary table)
     "markov_stationary_distribution": (2, 0),
     "markov_absorption_probabilities": (2, 0),

@@ -2,7 +2,8 @@
 
 Runs the named queries exactly like bench.py (same session factory, noop
 sink, best-of-2) but with the event log enabled and each run labelled by
-``setJobDescription``, then parses the log into a per-query breakdown:
+its job group (iterative operators label their rounds through the job
+description), then parses the log into a per-query breakdown:
 
   jobs, stages, tasks, task-time sum, max single stage, shuffle
   read/write bytes — the numbers that say whether a slow query is
@@ -74,9 +75,7 @@ def parse_eventlog(path: str) -> dict:
             et = ev.get("Event")
             if et == "SparkListenerJobStart":
                 jid = ev["Job ID"]
-                label = ev.get("Properties", {}).get(
-                    "spark.job.description", ""
-                )
+                label = ev.get("Properties", {}).get("spark.jobGroup.id", "")
                 job_label[jid] = label
                 for sid in ev.get("Stage IDs", []):
                     stage_job[sid] = jid
@@ -159,12 +158,12 @@ def main() -> int:
     for name in names:
         best = float("inf")
         for i in range(2):
-            spark.sparkContext.setJobDescription(f"{name}#run{i}")
+            spark.sparkContext.setJobGroup(f"{name}#run{i}", f"{name}#run{i}")
             t0 = time.perf_counter()
             df = QUERIES[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         times[name] = round(best, 3)
     app_id = spark.sparkContext.applicationId
     spark.stop()

@@ -23,10 +23,20 @@ so py4j can call it); if that internal API ever moves, the fallback
 round-trips through the public ``createDataFrame(RDD[Row], schema)``
 (correct, costs one extra row conversion per downstream pass), and
 failing even that returns the plain checkpoint (correct, re-grows
-stats). Each failed strategy is logged as a warning. Without probe
-columns no job runs (the checkpoint caches on first computation, inside
-whatever action consumes the chain); with them, one aggregate job both
-materializes the frame and computes the probe row.
+stats). Each failed strategy is logged as a warning.
+
+"Lazy" defers only the frame's final stage. Under AQE a DataFrame
+becomes an RDD only after its query stages have run, so the call itself
+runs one Spark job per upstream exchange (shuffle-map or broadcast
+stage): none for a narrow frame, one for a ``groupBy().agg()``, two for
+an aggregate joined back to its input. These jobs run outside any
+``QueryExecution`` action, so a ``QueryExecutionListener`` never sees
+them; they do carry the caller's job group and round label. The final
+stage is checkpointed on first computation, inside whatever action
+consumes the chain. Probe columns add the probe aggregate, whose
+exchange and result stage are two more jobs (three in all for a probed
+aggregate); the frame's final stage runs inside the first of them.
+``tests/test_barrier.py`` pins these counts.
 
 ``rounds`` is the loop header: ``for i in rounds(name, cap): ...; if
 done: break``. An until-converged loop (the default) that runs out of

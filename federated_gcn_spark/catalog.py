@@ -29,8 +29,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Spread a scan that produced fewer splits than the session has cores.
@@ -72,13 +70,6 @@ def load_table(
     tune(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     return ensure_parallelism(df) if parallel else df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    tune(spark)
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
@@ -209,21 +200,3 @@ def write_graph(
     if part_cols:
         w = w.partitionBy(*part_cols)
     w.parquet(os.path.join(path, "edges"))
-
-
-def read_graph(
-    spark: SparkSession,
-    path: str,
-    graph_id: int | None = None,
-    partition_id: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Read nodes+edges; equality filters prune to single partitions."""
-    nodes = spark.read.parquet(os.path.join(path, "nodes"))
-    edges = spark.read.parquet(os.path.join(path, "edges"))
-    if graph_id is not None:
-        nodes = nodes.where(nodes.graph_id == graph_id)
-        edges = edges.where(edges.graph_id == graph_id)
-    if partition_id is not None:
-        nodes = nodes.where(nodes.partition_id == partition_id)
-        edges = edges.where(edges.partition_id == partition_id)
-    return nodes, edges

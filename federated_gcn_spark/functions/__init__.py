@@ -1,8 +1,6 @@
 from federated_gcn_spark.functions.scalar import (  # noqa: F401
-    array_add,
     array_dot,
     array_l2_norm,
-    array_scale,
     cosine_similarity,
     f1_score,
     mem_cost_gb,

@@ -38,15 +38,6 @@ def array_l2_norm(a: Column | str) -> Column:
     return F.sqrt(array_dot(a, a))
 
 
-def array_add(a: Column | str, b: Column | str) -> Column:
-    return F.zip_with(_as_double_array(a), _as_double_array(b), lambda x, y: x + y)
-
-
-def array_scale(a: Column | str, s: Column | float) -> Column:
-    s = F.lit(s) if not isinstance(s, Column) else s
-    return F.transform(_as_double_array(a), lambda x: x * s)
-
-
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a,b) with a 0-norm guard (returns NULL for zero vectors)."""
     denom = array_l2_norm(a) * array_l2_norm(b)

@@ -105,10 +105,6 @@ def quality_score(text: Column | str) -> Column:
     )
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    return {lang: marker_hits(text, m) for lang, m in LANG_MARKERS.items()}
-
-
 def lang_id(text: Column | str) -> Column:
     """argmax over per-language marker hits; ties broken by fixed language
     order (en, de, es, fr, zh); all-zero → 'und' (undetermined).

@@ -9,10 +9,7 @@ from federated_gcn_spark.graph.pagerank import (  # noqa: F401
     pagerank,
     personalized_pagerank,
 )
-from federated_gcn_spark.graph.anf import (  # noqa: F401
-    effective_diameter,
-    neighborhood_function,
-)
+from federated_gcn_spark.graph.anf import neighborhood_function  # noqa: F401
 from federated_gcn_spark.graph.bfs import bfs_distances  # noqa: F401
 from federated_gcn_spark.graph.kcore import core_numbers, k_core  # noqa: F401
 from federated_gcn_spark.graph.labelprop import label_propagation  # noqa: F401

@@ -99,19 +99,6 @@ def exact_neighborhood_function(graph: Graph, max_hops: int = 6) -> DataFrame:
     return spark.createDataFrame(rows, "hop int, reachable_pairs bigint")
 
 
-def effective_diameter(
-    nf: DataFrame, quantile: float = 0.9
-) -> int:
-    """Smallest hop whose neighborhood function reaches ``quantile`` of
-    the final (saturated) value. ``nf`` is neighborhood_function output."""
-    rows = sorted((r["hop"], r["reachable_pairs"]) for r in nf.collect())
-    target = quantile * rows[-1][1]
-    for hop, n in rows:
-        if n >= target:
-            return hop
-    return rows[-1][0]
-
-
 def register_anf(
     graph: Graph, max_hops: int = 4, p: int = 7
 ) -> DataFrame:

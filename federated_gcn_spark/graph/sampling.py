@@ -87,22 +87,6 @@ def uniform_random_walks(
     return out
 
 
-def walk_context_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
-    """(target, context) positive pairs from walks — the UnsupervisedSampler
-    output consumed by the link generator (models/unsupervised.py:54-59).
-    Pairs vertices co-occurring within ``window`` steps on the same walk."""
-    a = walks.select("walk_id", F.col("step").alias("s1"), F.col("vertex").alias("target"))
-    b = walks.select("walk_id", F.col("step").alias("s2"), F.col("vertex").alias("context"))
-    return (
-        a.join(b, "walk_id")
-        .where(
-            (F.col("s1") != F.col("s2"))
-            & (F.abs(F.col("s1") - F.col("s2")) <= window)
-        )
-        .select("target", "context")
-    )
-
-
 def fanout_sample(
     graph: Graph,
     roots: DataFrame,

@@ -21,5 +21,4 @@ from federated_gcn_spark.operators.similarity import knn_join  # noqa: F401
 from federated_gcn_spark.operators.sketch import (  # noqa: F401
     cardinality_report,
     incremental_hll,
-    quantile_report,
 )

@@ -153,29 +153,6 @@ def als_fit(
     return user_f, item_f
 
 
-def als_rmse(
-    ratings: DataFrame, user_f: DataFrame, item_f: DataFrame
-) -> float:
-    """Training RMSE of the factorization (codegen dot product)."""
-    pred = (
-        ratings.join(user_f.withColumnRenamed("vec", "uv"), "user")
-        .join(item_f.withColumnRenamed("vec", "iv"), "item")
-        .select(
-            (
-                F.col("rating")
-                - F.aggregate(
-                    F.zip_with(F.col("uv"), F.col("iv"), lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ).alias("err")
-        )
-    )
-    return float(
-        pred.agg(F.sqrt(F.avg(F.col("err") * F.col("err")))).collect()[0][0]
-    )
-
-
 def als_rank1(
     ratings: DataFrame,
     user_col: str = "user",
@@ -308,38 +285,3 @@ def als_rank2(
         item_f = half(user_f, "user", "item", "u1", "u2", "v1", "v2"
                       ).localCheckpoint(eager=True)
     return user_f, item_f
-
-
-def recommend_topk(
-    user_f: DataFrame, item_f: DataFrame, k: int = 5, n_users: int = 10
-) -> DataFrame:
-    """Top-k items per user by factor dot product, for the n_users
-    smallest user ids — the serving-side join.
-
-    Scale shape: item factors broadcast (k doubles per item — MBs for
-    millions of items); the per-user top-k is a window over the
-    broadcast-joined product, partitioned by user.  For full-corpus
-    serving you'd ANN-index the item factors instead
-    (operators/similarity.py) — this is the exact small-candidate path.
-    """
-    users = user_f.select("user", F.col("vec").alias("uv")).orderBy("user").limit(
-        n_users
-    )
-    items = item_f.select("item", F.col("vec").alias("iv"))
-    scored = users.crossJoin(F.broadcast(items)).select(
-        "user",
-        "item",
-        F.aggregate(
-            F.zip_with(F.col("uv"), F.col("iv"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("score"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user").orderBy(F.col("score").desc(), F.col("item"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-    )

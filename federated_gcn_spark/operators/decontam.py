@@ -57,16 +57,3 @@ def contamination_report(
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
     )
-
-
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-) -> DataFrame:
-    """Training rows with no n-gram overlap with the eval set (left_anti
-    against the contaminated id list — keeps all train columns)."""
-    hits = contamination_report(train, eval_df, text_col, id_col, n)
-    return train.join(hits.select(id_col), id_col, "left_anti")

@@ -108,14 +108,6 @@ def with_minhash_signature(
     ).drop("__sh")
 
 
-def minhash_signature(
-    text: Column | str, num_hashes: int = 64, k: int = 3, seed: int = 42
-) -> Column:
-    """Single-expression form — ONLY for tiny inputs/tests; prefer
-    ``with_minhash_signature`` (see perf note on minhash_signature_over)."""
-    return minhash_signature_over(shingles(text, k), num_hashes, seed)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -362,72 +354,3 @@ def simhash(text: Column | str, seed: int = 42) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) ≤ max_hamming.
-
-    Pigeonhole banding: split the 63 bits into max_hamming+1 chunks; any
-    pair within Hamming ≤ max_hamming differs in at most max_hamming
-    chunks, so it matches exactly on ≥1 chunk → equi-join per chunk, then
-    verify with bit_count(xor) on the candidates. Chunk count derives from
-    max_hamming so recall is guaranteed for any bound (≤3 keeps the
-    classic 4×16-bit layout; larger bounds get more, narrower chunks —
-    more candidates, still never doc×doc).
-    """
-    if not 0 <= max_hamming < N_SIMHASH_BITS:
-        raise ValueError(
-            f"max_hamming must be in [0, {N_SIMHASH_BITS - 1}], got {max_hamming}"
-        )
-    n_chunks = max_hamming + 1
-    # chunk widths: ceil/floor split of 63 bits into n_chunks contiguous spans
-    base_w, extra = divmod(N_SIMHASH_BITS, n_chunks)
-    offsets, widths = [], []
-    pos = 0
-    for i in range(n_chunks):
-        w = base_w + (1 if i < extra else 0)
-        offsets.append(pos)
-        widths.append(w)
-        pos += w
-    sigs = docs.select(
-        F.col(id_col).alias("id"), simhash(text_col, seed).alias("sh")
-    ).localCheckpoint(eager=True)
-    chunks = sigs.select(
-        "id",
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sh"), off).bitwiseAND(F.lit((1 << w) - 1))
-                    for off, w in zip(offsets, widths)
-                ]
-            )
-        ).alias("chunk_id", "chunk"),
-    )
-    cand = (
-        chunks.alias("a")
-        .join(
-            chunks.alias("b"),
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return cand.select(
-        "id_a",
-        "id_b",
-        F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
-    ).where(F.col("hamming") <= max_hamming)

@@ -86,29 +86,8 @@ def fedavg_arrow(params: DataFrame, weighted: bool = True) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# list-of-ndarray ↔ parameter-table codec (G8 weight get/set contract)
+# parameter-table → list-of-ndarray decoder (G8 weight get contract)
 # ---------------------------------------------------------------------------
-
-def weights_to_rows(
-    weights: list[np.ndarray],
-    client_id: str = "driver",
-    round_no: int = 0,
-    num_examples: int = 1,
-) -> list[dict]:
-    """Flatten a Keras-style list-of-ndarrays (README.md:37-42 contract)
-    into parameter-table rows."""
-    return [
-        {
-            "round": round_no,
-            "client_id": client_id,
-            "layer": i,
-            "shape": list(w.shape),
-            "values": [float(x) for x in np.asarray(w, dtype="float64").ravel()],
-            "num_examples": num_examples,
-        }
-        for i, w in enumerate(weights)
-    ]
-
 
 def rows_to_weights(rows) -> list[np.ndarray]:
     """Parameter-table rows (any order) → list-of-ndarrays by layer."""

@@ -28,17 +28,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-MEDIA_META_FIELDS = (
-    "width int, height int, channels int, sample_rate int, n_frames int, format string"
-)
-MEDIA_SCHEMA = f"media_id long, kind string, payload binary, meta struct<{MEDIA_META_FIELDS}>"
-
-
-def make_media_table(spark, rows) -> DataFrame:
-    """rows: (media_id, kind, payload: bytes, meta dict-like tuple)."""
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def _fake_pixels(payload: bytes, n: int) -> np.ndarray:
@@ -162,100 +151,4 @@ def encode_decode_features(gen: DataFrame) -> DataFrame:
             "media_id long, kind string, decoded_ok int, "
             "n_payload_bytes long, f0 long, f1 long, f2 long, f3 long"
         ),
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per sampled frame index,
-    computed from metadata only (n_frames) — the shuffle-free explode that
-    a real frame extractor would consume. Output:
-    (media_id, frame_index, payload, meta)."""
-    n = F.coalesce(F.col("meta.n_frames"), F.lit(0))
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            "payload",
-            "meta",
-            F.explode(
-                F.when(
-                    n > 0, F.sequence(F.lit(0), n - 1, F.lit(every_n))
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("frame_index"),
-        )
-        .select("media_id", "frame_index", "payload", "meta")
-    )
-
-
-def audio_chunk_stats(media: DataFrame, chunk_bytes: int = 1024) -> DataFrame:
-    """Audio payload → per-chunk byte-level stats (real bytes, no codec):
-    (media_id, chunk_index, n_bytes, chunk_crc). Demonstrates binary
-    slicing + explode staying fully relational."""
-    n_chunks = F.ceil(F.length("payload") / F.lit(chunk_bytes)).cast("int")
-    chunked = media.where(F.col("kind") == "audio").select(
-        "media_id",
-        "payload",
-        F.explode(F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))).alias(
-            "chunk_index"
-        ),
-    )
-    chunk = F.substring(
-        F.col("payload"), F.col("chunk_index") * chunk_bytes + 1, chunk_bytes
-    )
-    return chunked.select(
-        "media_id",
-        "chunk_index",
-        F.length(chunk).alias("n_bytes"),
-        F.crc32(chunk).alias("chunk_crc"),
-    )
-
-
-def resize_images(
-    media: DataFrame, out_h: int, out_w: int
-) -> DataFrame:
-    """Dependency-free image resize (decode → nearest-neighbor sample →
-    re-encode) over ``mapInPandas`` — the last of the four multimodal
-    verbs (decode / feature-extract / resize / frame-sample).
-
-    Only the (media_id, payload) columns cross the Arrow boundary (the
-    skyline transfer-width lesson); rows whose payload is not a valid
-    BMP come back ``resized_ok = false`` with an empty payload rather
-    than failing the batch.  Nearest-neighbor index math is exact
-    integer arithmetic (src = (dst * src_dim) // out_dim), so the output
-    bytes are deterministic on any engine/platform.
-
-    Output: (media_id, payload BINARY, out_h INT, out_w INT,
-    resized_ok BOOLEAN).
-    """
-    from federated_gcn_spark.functions.codecs import decode_bmp, encode_bmp
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, oks = [], []
-            for payload in pdf["payload"]:
-                try:
-                    px = decode_bmp(bytes(payload))
-                    h, w = px.shape[0], px.shape[1]
-                    rows = (np.arange(out_h) * h) // out_h
-                    cols = (np.arange(out_w) * w) // out_w
-                    resized = px[rows][:, cols]
-                    payloads.append(encode_bmp(resized))
-                    oks.append(True)
-                except Exception:
-                    payloads.append(b"")
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "out_h": out_h,
-                    "out_w": out_w,
-                    "resized_ok": oks,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run,
-        schema="media_id long, payload binary, out_h int, out_w int, "
-        "resized_ok boolean",
     )

@@ -84,26 +84,6 @@ def gram_moments(
     return n, mean, cov
 
 
-def fit_pca(
-    df: DataFrame, vec_col: str = "embedding", k: int = 4, dim: int | None = None
-):
-    """Top-k principal axes. Returns (mean, components [k x d],
-    eigenvalues [k], explained variance ratios [k])."""
-    n, mean, cov = gram_moments(df, vec_col, dim)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order].T
-    # deterministic sign: largest-|.| coordinate positive
-    for i in range(comps.shape[0]):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
-    ev = evals[order]
-    total = float(evals.sum())
-    ratio = ev / total if total > 0 else np.zeros_like(ev)
-    return mean, comps, ev, ratio
-
-
 def project(
     df: DataFrame,
     mean: np.ndarray,
@@ -144,8 +124,6 @@ def project(
 # ---------------------------------------------------------------------------
 # Cross-engine-replayable spectrum: deflated power iteration with squaring
 # ---------------------------------------------------------------------------
-
-_Q9 = None  # lazy Decimal constants (decimal import kept out of module load)
 
 
 def _round9_nanos_exact(x: float) -> int:

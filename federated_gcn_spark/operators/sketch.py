@@ -1,13 +1,12 @@
-"""Approximate, mergeable aggregates: HLL cardinality + quantile sketch.
+"""Approximate, mergeable aggregates: HLL and KMV cardinality sketches.
 
 At 100 TB, exact COUNT(DISTINCT) is a full shuffle of every distinct
-key and exact percentiles need a global sort — the first things a real
-pipeline trades for sketches. Spark ships Apache DataSketches HLL
-(``hll_sketch_agg``/``hll_union_agg``, Spark 3.5+) whose killer
-property is MERGEABILITY: per-partition/per-day sketches union in O(1)
-to the global sketch, so cardinalities maintain incrementally (new day
-arrives → union one sketch) instead of rescanning history. Quantiles
-use ``percentile_approx`` (Greenwald-Khanna), one pass, bounded memory.
+key — the first thing a real pipeline trades for a sketch. Spark ships
+Apache DataSketches HLL (``hll_sketch_agg``/``hll_union_agg``, Spark
+3.5+) whose killer property is MERGEABILITY: per-partition/per-day
+sketches union in O(1) to the global sketch, so cardinalities maintain
+incrementally (new day arrives → union one sketch) instead of
+rescanning history.
 
 Error bounds are pinned by tests (test_sketch.py) against exact
 answers: HLL at lgK=12 is ~1.6% RSE; the tests assert 5%.
@@ -60,30 +59,6 @@ def incremental_hll(
         F.hll_sketch_estimate(F.hll_union_agg(F.col("sketch"))).alias(
             "merged_estimate"
         ),
-    )
-
-
-def quantile_report(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    probs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.95),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Per-group approximate quantiles (Greenwald-Khanna, one pass,
-    O(accuracy) memory per group) in long format: (group, prob, value)."""
-    q = df.groupBy(group_col).agg(
-        F.percentile_approx(
-            F.col(value_col), F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
-        ).alias("qs")
-    )
-    prob_arr = F.array(*[F.lit(p) for p in probs])
-    return (
-        q.select(
-            group_col,
-            F.explode(F.arrays_zip(prob_arr.alias("prob"), F.col("qs").alias("value"))).alias("z"),
-        )
-        .select(group_col, F.col("z.prob").alias("prob"), F.col("z.value").alias("value"))
     )
 
 

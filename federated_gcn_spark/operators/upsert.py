@@ -1,28 +1,23 @@
-"""MERGE INTO (upsert) semantics over immutable columnar snapshots.
+"""MERGE INTO (upsert) semantics as a relational plan.
 
 The lakehouse write primitive: apply a batch of updates/inserts to a
 keyed table — matched keys take the update's values, unmatched update
 keys insert, everything else carries over (optionally: matched keys in
-a delete set drop). Delta/Iceberg spell this MERGE INTO; on plain
-parquet the engine computes the merged RESULT relationally and swaps
-the snapshot directory atomically (rename-aside, same crash-safe dance
-as catalog.compact_parquet).
+a delete set drop). Delta/Iceberg spell this MERGE INTO; here the engine
+computes the merged RESULT relationally and leaves the write to the
+caller.
 
 Scale shape: one full-outer-shaped pass — implemented as
 (base left_anti updates) ∪ updates — so cost is one anti join keyed on
 the merge key (AQE broadcasts the update side when it is a trickle,
-which is the common case) plus a write of the new snapshot. Updates
-win wholesale (last-writer-wins per key); for column-level merges
-compose with operators/incremental.py state algebra instead.
+which is the common case). Updates win wholesale (last-writer-wins per
+key); for column-level merges compose with operators/incremental.py
+state algebra instead.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -68,191 +63,3 @@ def merge_upsert(
         survivors = survivors.join(deletes.select(*keys), keys, "left_anti")
         updates = updates.join(deletes.select(*keys), keys, "left_anti")
     return survivors.unionByName(updates)
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    deletes: DataFrame | None = None,
-) -> None:
-    """MERGE INTO a parquet snapshot directory, atomically-enough.
-
-    Writes the merged result to a temp dir, renames the live dir aside,
-    renames the new one in, then deletes the old — a crash at any point
-    leaves either the old or the new complete snapshot on disk (the
-    rename-aside protocol adopted after the round-2 compact_parquet
-    review).
-    """
-    base = spark.read.parquet(path)
-    merged = merge_upsert(base, updates, keys, deletes)
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-
-
-def upsert_stats(
-    base: DataFrame, updates: DataFrame, keys: list[str]
-) -> DataFrame:
-    """One-row audit of what a merge WOULD do: matched (update), new
-    (insert), and carried-over counts — the dry-run every production
-    MERGE pipeline logs."""
-    b = base.select(*keys)
-    # distinct: the merge collapses duplicate update keys, so the audit
-    # counts keys, keeping n_inserted/n_carried arithmetic consistent
-    u = updates.select(*keys).distinct()
-    n_base = b.agg(F.count(F.lit(1)).alias("n_base"))
-    n_upd = u.agg(F.count(F.lit(1)).alias("n_updates"))
-    matched = u.join(b, keys, "left_semi").agg(
-        F.count(F.lit(1)).alias("n_matched")
-    )
-    return (
-        n_base.crossJoin(n_upd)
-        .crossJoin(matched)
-        .select(
-            "n_base",
-            "n_updates",
-            "n_matched",
-            (F.col("n_updates") - F.col("n_matched")).alias("n_inserted"),
-            (F.col("n_base") - F.col("n_matched")).alias("n_carried"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Versioned snapshots: MERGE history + time travel
-# ---------------------------------------------------------------------------
-
-_VERSION_PREFIX = "v="
-
-
-def snapshot_versions(table_dir: str) -> list[int]:
-    """Committed snapshot versions (ascending).  A version counts only
-    once its Spark ``_SUCCESS`` marker exists, so a concurrent reader
-    never sees a half-written snapshot as latest."""
-    if not os.path.isdir(table_dir):
-        return []
-    out = []
-    for name in os.listdir(table_dir):
-        if name.startswith(_VERSION_PREFIX):
-            try:
-                v = int(name[len(_VERSION_PREFIX):])
-            except ValueError:
-                continue
-            if os.path.exists(os.path.join(table_dir, name, "_SUCCESS")):
-                out.append(v)
-    return sorted(out)
-
-
-def _version_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, f"{_VERSION_PREFIX}{version:05d}")
-
-
-def read_snapshot(spark: SparkSession, table_dir: str, version: int | None = None):
-    """Time-travel read: the table AS OF ``version`` (default: latest).
-
-    Immutable snapshot dirs make this trivially consistent — a reader of
-    v=k is never affected by later merges, the warehouse property that
-    pins training-data reproducibility (read the exact corpus version a
-    model was trained on)."""
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise ValueError(f"no committed snapshots under {table_dir}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(
-            f"version {version} not available; retained: {versions}"
-        )
-    return spark.read.parquet(_version_path(table_dir, version))
-
-
-def upsert_versioned(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    keys: list[str],
-    deletes: DataFrame | None = None,
-) -> int:
-    """MERGE INTO the latest snapshot, committing the result as a NEW
-    immutable version (v=00000, v=00001, ...) instead of replacing in
-    place — history is retained for time travel until vacuumed.  Returns
-    the new version number.
-
-    Commit protocol: write to a temp dir, then one atomic rename into
-    the versioned name; the ``_SUCCESS`` marker inside makes the commit
-    visible.  A crash leaves either no new dir or an uncommitted one
-    (no ``_SUCCESS``), never a torn snapshot."""
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise ValueError(
-            f"no base snapshot; call create_snapshot() first for {table_dir}"
-        )
-    base = read_snapshot(spark, table_dir, versions[-1])
-    merged = merge_upsert(base, updates, keys, deletes)
-    new_v = versions[-1] + 1
-    tmp = os.path.join(table_dir, f"__tmp_{uuid.uuid4().hex[:8]}")
-    merged.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, _version_path(table_dir, new_v))
-    return new_v
-
-
-def create_snapshot(spark: SparkSession, table_dir: str, df: DataFrame) -> int:
-    """Initialize a versioned table at v=00000."""
-    os.makedirs(table_dir, exist_ok=True)
-    tmp = os.path.join(table_dir, f"__tmp_{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, _version_path(table_dir, 0))
-    return 0
-
-
-def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
-    """Drop all but the newest ``keep_last`` versions; returns the
-    removed version numbers.  Callers own the retention policy trade-off
-    (time-travel depth vs storage)."""
-    versions = snapshot_versions(table_dir)
-    doomed = versions[:-keep_last] if keep_last > 0 else versions
-    for v in doomed:
-        shutil.rmtree(_version_path(table_dir, v))
-    return doomed
-
-
-def snapshot_diff(
-    spark: SparkSession,
-    table_dir: str,
-    v_from: int,
-    v_to: int,
-    keys: list[str],
-) -> DataFrame:
-    """Change-data-capture between two retained versions: one row per
-    changed key with change_type ∈ {insert, delete, update} — the diff a
-    downstream incremental consumer replays instead of re-reading the
-    full corpus.
-
-    Computed as a full-outer join on keys with a whole-row struct
-    equality check for updates — one shuffle on the key, no row-level
-    history needed (the immutable snapshots ARE the history)."""
-    a = read_snapshot(spark, table_dir, v_from)
-    b = read_snapshot(spark, table_dir, v_to)
-    val_cols = [c for c in a.columns if c not in keys]
-    a_side = a.select(
-        *keys, F.struct(*val_cols).alias("__a")
-    )
-    b_side = b.select(
-        *keys, F.struct(*val_cols).alias("__b")
-    )
-    j = a_side.join(b_side, keys, "full_outer")
-    change = (
-        F.when(F.col("__a").isNull(), F.lit("insert"))
-        .when(F.col("__b").isNull(), F.lit("delete"))
-        .when(F.col("__a") != F.col("__b"), F.lit("update"))
-    )
-    return (
-        j.withColumn("change_type", change)
-        .where(F.col("change_type").isNotNull())
-        .select(*keys, "change_type")
-    )

@@ -5,8 +5,8 @@ on that column and none on any other. Interleaving the bits of several
 key columns (the Morton / Z-order curve) gives *every* interleaved
 column locality in the sorted order, so parquet footer min/max stats
 prune files for box predicates on ANY of them — the layout trick behind
-Delta/Iceberg OPTIMIZE ZORDER, here as a plain column expression +
-range-partitioned write.
+Delta/Iceberg OPTIMIZE ZORDER, here as a plain column expression that a
+caller sorts or range-partitions by.
 
 The key expression is pure literal-shift bit arithmetic (codegen, no
 UDF): bit b of column j lands at position ``b * n_cols + j``. Inputs
@@ -17,7 +17,7 @@ quantized values).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -30,29 +30,3 @@ def zorder_key(cols: list[Column], bits: int = 8) -> Column:
             bit = F.shiftright(c.cast("long"), b).bitwiseAND(F.lit(1).cast("long"))
             out = out.bitwiseOR(F.shiftleft(bit, b * n + j))
     return out
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    n_files: int = 16,
-) -> None:
-    """Write ``df`` as parquet laid out along the Z-curve of ``cols``.
-
-    ``repartitionByRange`` on the Morton key gives each output file a
-    contiguous curve segment, which is what makes per-file min/max
-    ranges of the ORIGINAL columns tight — the pruning the layout
-    exists for (demonstrated against a naturally-partitioned copy in
-    tests/test_zorder.py).
-    """
-    key = zorder_key([F.col(c) for c in cols], bits=bits)
-    (
-        df.withColumn("_z", key)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -1,20 +1,8 @@
-"""Query/oracle registry, re-ordered for driver correctness coverage.
+"""Query/oracle registry: importing the query modules registers every
+query in ``plans.queries.QUERIES`` (registration order) and its DuckDB
+twin, if it has one, in ``plans.queries.ORACLE``.
 
-The driver's t2 gate records rows for only the FIRST 50 entries of
-``queries()`` per round (observed in CORRECTNESS_r01/r02: the recorded set
-is exactly the first 50 names in iteration order).  With ~200 registered
-queries, a static registration order would leave the tail permanently
-unrecorded.  We therefore rotate: queries that already have an official
-driver-recorded row (union of CORRECTNESS_r01 + r02) sort AFTER queries
-that do not, so each round's 50 slots go to never-yet-recorded queries
-first.  Within each block the original registration order is preserved,
-except a small promoted list (queries the round-2 verdict flagged by name)
-which goes at the very front.
-
-Every query is still correctness-checked every round by
-``tools/check_oracle.py`` (full-registry run, log committed as an artifact);
-this ordering only affects which subset lands in the driver's official
-CORRECTNESS_r{N}.json file.
+``tools/check_oracle.py`` runs the whole registry against its oracles.
 """
 
 from federated_gcn_spark.plans import queries_analytics  # noqa: F401  (registers)
@@ -62,179 +50,5 @@ from federated_gcn_spark.plans import queries_wave40  # noqa: F401  (registers)
 from federated_gcn_spark.plans.queries import ORACLE as _ORACLE
 from federated_gcn_spark.plans.queries import QUERIES as _QUERIES
 
-# Names with an official driver-recorded correctness row as of round 9
-# (CORRECTNESS_r01.json ∪ … ∪ r09).  Update after each round.
-_DRIVER_RECORDED = {
-    # --- recorded in r09 (all 50 green; the other 15 slots refreshed
-    # names already listed in earlier blocks below, incl. the re-promoted
-    # `chow_break_test` which is now green under its round-9 contract) ---
-    "adstock_grid_fit", "atkinson_index_binned", "cramer_von_mises_binned",
-    "croston_demand_forecast", "dagostino_k2", "dau_wau_stickiness",
-    "december_effect_regression", "degree_attack_robustness",
-    "energy_distance_halves", "esd_outlier_rounds", "feature_scaling_stats",
-    "forecast_accuracy_report", "gini_gain_feature_ranking",
-    "handshake_matching_stats", "ipf_raking_weights", "jensen_shannon_drift",
-    "kmv_set_algebra", "markov_absorption_probabilities",
-    "markov_entropy_rate", "markov_mixing_curve",
-    "markov_stationary_distribution", "median_polish_weekday_month",
-    "mood_median_test", "newsvendor_stock_levels", "nmi_lang_source",
-    "order_lines_nested", "pinball_quantile_eval", "power_iteration_top_pc",
-    "qq_deciles_halves", "queueing_mmc_whatif", "rake_keyphrases",
-    "revenue_bridge_decomposition", "ridge_regression_path",
-    "target_encoding_smoothed", "unpivot_metrics",
-    # --- recorded in r08 (49 green; `chow_break_test` was RED — hash
-    # mismatch from a sub-ulp rounding contract + POWER() drift, fixed
-    # in round 9 and re-recorded green in r09 slot 1) ---
-    "anderson_darling_gap_test", "bartlett_test", "benjamini_hochberg_fdr",
-    "breusch_pagan", "brown_forsythe_levene", "butterfly_count",
-    "capture_recapture_estimate", "cart_depth2_tree", "chow_break_test",
-    "clustering_null_model", "cooks_distance_report",
-    "cross_correlation_lags", "dispersion_index", "durbin_watson",
-    "eigenvector_centrality", "epoch_folding_periodogram",
-    "exponential_gap_fit", "feature_hash_collisions", "fleiss_kappa",
-    "g_test_priority_segment", "gmm_em_1d", "granger_causality_1lag",
-    "greedy_coloring_stats", "growth_streaks", "gumbel_extreme_fit",
-    "hill_tail_index", "hoover_index", "jl_projection_fidelity",
-    "knn_loo_accuracy", "laspeyres_paasche_index", "log_return_volatility",
-    "mojibake_stats", "nelson_aalen_hazard", "ngram_novelty_scan",
-    "pacf_lags", "page_hinkley_drift", "poisson_rate_test",
-    "set_similarity_counts", "set_similarity_topk",
-    "shard_assignment_balance", "simpson_diversity", "snapshot_diff_stats",
-    "somers_d_priority_late", "table_fingerprint", "tukey_fences_report",
-    "tukey_hsd_pairs", "turning_points_test", "xyz_demand_classes",
-    "youden_threshold", "zone_map_skipping_report",
-    # --- recorded in r07 (all 50 green; `pca_variance` was the ordered
-    # re-promotion and is already listed in the r01-r03 block below) ---
-    "ann_ndcg_report", "anova_oneway", "bollinger_bands",
-    "brier_calibration_report", "clustering_silhouette", "cochran_q_test",
-    "cohen_kappa", "community_conductance", "copurchase_pairs",
-    "davies_bouldin_index", "diff_in_diff_revenue",
-    "double_smoothing_forecast", "embedding_int8_quant_report",
-    "embedding_truncation_fidelity", "event_path_trigrams", "friedman_test",
-    "gopher_quality_rules", "graph_degree_gini", "grubbs_outlier_test",
-    "harmonic_centrality", "herfindahl_index", "hll_error_report",
-    "hurst_exponent", "jarque_bera_price", "kendall_tau_daily",
-    "kmv_error_report", "ljung_box_test", "max_drawdown", "mcc_score",
-    "mcnemar_test", "neighbor_degree_curve", "pettitt_changepoint",
-    "rich_club_coefficient", "rsi_indicator", "seasonal_decompose",
-    "sequence_support_pairs", "ses_gridsearch",
-    "session_entropy_distribution", "session_window_stats",
-    "sprt_conversion_monitor", "srm_assignment_check",
-    "stratified_adjusted_lift", "systematic_weighted_sample",
-    "temperature_mixture_weights", "theil_index", "trimmed_mean_prices",
-    "unseen_vocab_mass", "value_at_risk", "woe_iv_binning",
-    # --- recorded in r06 (all 50 green, all first-ever names) ---
-    "adaboost_stumps", "ann_recall_report", "attribution_credit_split",
-    "audience_venn", "benford_first_digit", "bootstrap_revenue_ci",
-    "cohort_ltv_curve", "community_modularity", "conformal_price_interval",
-    "contingency_association", "corpus_drift_report",
-    "corpus_health_report", "cuped_adjusted_lift", "cusum_changepoint",
-    "degree_assortativity", "degree_powerlaw_fit", "ewma_smoothed_revenue",
-    "gains_lift_table", "gini_customer_spend", "hellinger_price_drift",
-    "hits_authorities", "hybrid_search_rrf", "interevent_burstiness",
-    "isotonic_calibration", "k_anonymity_report", "kruskal_wallis_priority",
-    "ks_two_sample_price", "mann_kendall_trend", "mann_whitney_halves",
-    "moving_median_revenue", "odds_ratio_urgent_building",
-    "part_entity_matches", "price_elasticity_by_brand", "psi_price_drift",
-    "revenue_autocorrelation", "rfm_segmentation",
-    "rolling_correlation_revenue_orders", "rolling_distinct_users_hll",
-    "runs_test_revenue", "scd2_point_in_time_join", "source_lang_entropy",
-    "spearman_qty_price", "sql_interface_top_spenders", "theil_sen_trend",
-    "time_to_convert_percentiles", "vocab_growth_heaps",
-    "wasserstein_price_drift", "weekday_seasonal_profile",
-    "wilcoxon_wow_revenue", "zipf_exponent_fit",
-    # --- recorded in r05 (all 50 green; the 10 promoted stale names were
-    # already listed below from their r01/r02 rows) ---
-    "abc_revenue_classes", "bloom_prejoin_stats", "bpe_corpus_tokenization",
-    "bpe_learned_merges", "brand_supplier_distribution", "burst_detection",
-    "chi2_top_terms", "cms_heavy_hitters", "cohort_retention_matrix",
-    "disjunctive_promo_revenue", "dsir_importance_logweights",
-    "dup_span_removal", "duplicated_span_fraction", "equidepth_price_buckets",
-    "event_transition_matrix", "exact_group_medians", "grouping_sets_lineitem",
-    "incremental_agg_refresh", "join_key_skew_report", "ktruss_supersteps",
-    "link_prediction_scores", "mis_members", "naive_bayes_lang",
-    "nation_volume_trade", "new_vs_returning_users", "ohlc_daily",
-    "part_skyline", "pmi_top_pairs", "postings_index", "price_band_revenue",
-    "price_histogram", "quality_classifier_filter",
-    "returnflag_priority_counts", "semantic_dedup_stats",
-    "set_similarity_pairs", "ship_lag_percentiles", "small_quantity_revenue",
-    "trending_event_types", "winsorized_price_stats", "zorder_curve_sample",
-    # --- recorded in r04 ---
-    "acctbal_percentiles", "als_recommendations", "bfs_distances",
-    "bm25_search", "confusion_matrix", "customer_order_distribution",
-    "edit_distance_adjacent", "exact_dedup_clusters", "forecast_revenue",
-    "full_outer_match_stats", "gap_fill_daily", "hyperanf_reachable_pairs",
-    "incremental_dedup", "integrity_report", "kaplan_meier_churn",
-    "kfold_split_stats", "large_volume_customers", "linear_fit",
-    "local_clustering", "logistic_coeffs", "merge_upsert_segments",
-    "monthly_revenue", "multimodal_features", "negative_sampling_table",
-    "node2vec_walk_stats", "ntile_spend_quartiles", "orders_array_agg",
-    "price_band_join", "profile_documents", "promo_revenue_share",
-    "quality_weighted_sample", "readability_scores", "returned_item_report",
-    "revenue_share", "rolling_weekly_revenue", "salted_join_revenue",
-    "scd2_user_value_versions", "score_calibration", "session_stats",
-    "shipping_priority", "sketch_cardinalities", "sql_interface_orders",
-    "supplier_lift", "supplier_revenue_share", "unigram_nll",
-    "urgent_averse_rich", "value_anomalies", "waiting_suppliers",
-    "weekday_activity", "weighted_neighbor_value",
-    # --- recorded in r01-r03 ---
-    "als_rank1_factors", "anf_register_supersteps", "ann_topk",
-    "anti_join_no_orders", "asof_latest_update", "bigram_nll",
-    "bpe_token_estimate", "chunk_docs", "connected_components",
-    "count_examples", "covariance_matrix", "cube_revenue",
-    "decontam_report", "dedup_exact", "degree_counts", "distinct_nodes",
-    "doc_fingerprint", "documents_curated", "domain_mixture_sample",
-    "double_split_stats", "edge_split_stats", "edge_union_all",
-    "embedding_centroids", "embedding_merge", "embedding_near_dup",
-    "embedding_norms", "events_hopping", "events_json_extract",
-    "events_sessionize", "events_tumbling", "exact_order_statistics",
-    "except_segments", "f1_metrics", "fanout_sampling", "fedavg_tensor",
-    "fedavg_weighted_scalar", "federated_round_stats", "flagship_revenue",
-    "funnel_conversion", "graphsage_layer", "hll_replay_cardinality",
-    "intersect_segments", "ivf_ann_topk", "kcore_stats", "kmv_distinct",
-    "knn_join_topk", "label_communities", "lang_id_detect", "link_scores",
-    "market_share", "max_acctbal_customer", "mem_cost_model",
-    "merge_keep_first", "min_cost_supplier", "minhash_near_dup_pairs",
-    "minhash_signatures", "moving_avg_spend", "near_dedup_corpus",
-    "neighbor_mean", "neighborhood_function", "ngram_jaccard_adjacent",
-    "normalized_dedup", "order_priority_check", "pagerank_top",
-    "pca_variance", "pii_redaction", "pivot_status_counts", "ppr_top",
-    "pq_adc_topk", "price_stats", "pricing_summary", "product_type_profit",
-    "project_cast", "promo_part_suppliers", "quality_score",
-    "quantity_percentiles", "random_walks", "repetition_stats",
-    "retention_daily", "robust_centroids", "roc_auc", "rollup_revenue",
-    "scd2_user_states", "semi_join_big_spenders", "sequence_packing",
-    "simhash_fingerprints", "similarity_topk", "sssp_distances",
-    "stratified_docs_sample", "tfidf_top_terms", "token_count",
-    "top_customers", "top_supplier_quarter", "training_waves",
-    "triangle_stats", "two_hop_paths", "unweighted_mean", "window_topk",
-    "zipf_top_terms",
-}
-
-# Queries re-promoted to the front of the line despite an existing official
-# row.  Round 11: empty — the four contracts round 9's rounding audit
-# re-specified (`anova_oneway`, `bollinger_bands`, `bartlett_test`,
-# `brown_forsythe_levene`) earned fresh official rows in CORRECTNESS_r10
-# (all green), so nothing is owed a slot out of order.
-_PROMOTED: list = []
-
-# Never-recorded names ordered to the very front of the fresh block.
-# Round 10: empty — every registry name has an official recorded row
-# (union r01–r09 = 373/373), so there is no fresh block to order.
-_FRESH_FIRST: list = []
-
-
-def _rotated(reg: dict) -> dict:
-    promoted = [n for n in _PROMOTED if n in reg]
-    first = [
-        n for n in _FRESH_FIRST
-        if n in reg and n not in _DRIVER_RECORDED and n not in promoted
-    ]
-    head = set(promoted) | set(first)
-    fresh = [n for n in reg if n not in _DRIVER_RECORDED and n not in head]
-    recorded = [n for n in reg if n in _DRIVER_RECORDED and n not in head]
-    return {n: reg[n] for n in promoted + first + fresh + recorded}
-
-
-QUERIES = _rotated(_QUERIES)
+QUERIES = _QUERIES
 ORACLE = {n: _ORACLE[n] for n in QUERIES if n in _ORACLE}

@@ -471,7 +471,7 @@ def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Event-time operators (batch twins of the streaming ops; §2.8)
+# Event-time operators (§2.8)
 # ---------------------------------------------------------------------------
 
 
@@ -503,8 +503,7 @@ def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-minute tumbling-window aggregate over the event stream table.
 
     Time math on epoch-nano BIGINTs (integer division) — exact, engine-
-    portable, and cheaper than timestamp conversion. The streaming twin
-    (readStream + window + watermark) lives in streaming/events.py.
+    portable, and cheaper than timestamp conversion.
     """
     events = load_table(spark, sf_dir, "events")
     sec = _event_epoch_sec(events)

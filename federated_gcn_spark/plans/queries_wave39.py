@@ -391,9 +391,6 @@ def _erlang_sql() -> str:
     return " + ".join(terms)
 
 
-_FACT = {1: 1, 2: 2, 3: 6, 4: 24, 5: 120}
-
-
 @register(
     "queueing_mmc_whatif",
     f"""

@@ -237,8 +237,7 @@ def attribution_credit_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     who purchases, credit the touches (view/click/signup) strictly
     before the FIRST purchase — 40% first touch, 40% last, middles split
     the remaining 20% — then roll credit up by channel.  The credit
-    model every marketing-mix dashboard starts from; companion to the
-    streaming last-touch join in streaming/joins.py.
+    model every marketing-mix dashboard starts from.
 
     100 TB shape: one user_id exchange carries everything — the first-
     purchase time, the journey ranking, and the journey length all ride

@@ -1,14 +1,7 @@
 from federated_gcn_spark.sources.csv import (  # noqa: F401
-    read_edge_csv,
-    read_node_csv,
     read_raw_attributes,
     read_raw_edges,
     write_edges_csv,
     write_nodes_csv,
 )
-from federated_gcn_spark.sources.weights import (  # noqa: F401
-    load_weights_npy,
-    read_weights_table,
-    save_weights_npy,
-    write_weights_table,
-)
+from federated_gcn_spark.sources.weights import read_weights_table  # noqa: F401

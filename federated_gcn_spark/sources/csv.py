@@ -26,27 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_node_csv(spark: SparkSession, path: str, feature_dim: int | None = None) -> DataFrame:
-    """(id BIGINT, features ARRAY<FLOAT>) from an id+features CSV (S1)."""
-    df = spark.read.option("header", True).csv(path)
-    cols = df.columns
-    id_col = cols[0]
-    feat_cols = cols[1:] if feature_dim is None else cols[1 : 1 + feature_dim]
-    return df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.array(*[F.col(c).cast("float") for c in feat_cols]).alias("features"),
-    )
-
-
-def read_edge_csv(spark: SparkSession, path: str) -> DataFrame:
-    """(src BIGINT, dst BIGINT) from a source,target CSV (S2)."""
-    df = spark.read.option("header", True).csv(path)
-    s, t = df.columns[0], df.columns[1]
-    return df.select(
-        F.col(s).cast("long").alias("src"), F.col(t).cast("long").alias("dst")
-    )
-
-
 def _split_ws(df: DataFrame) -> DataFrame:
     return df.select(F.split(F.trim(F.col("value")), r"\s+").alias("f")).where(
         F.size("f") > 0

@@ -1,52 +1,18 @@
-"""Model-weight persistence (S4/S7).
+"""Model-weight readback (S7).
 
 The reference persists the global weights once per round as a versioned
-``.npy``: ``weights_graphID:{g}_V{cycle}.npy`` (fl_server.py:78-80) and
-reloads with ``np.load(..., allow_pickle=True)`` (misc/link-pred.py:74).
-
-Two spellings here:
-- npy (driver-side, byte-compatible convenience): one ``.npy`` of a
-  ragged object array per version — weights are *driver state*, tiny
-  next to the data, so a local file is the honest mapping (S4's Spark
-  realization per SURVEY.md §2.1: driver np.load → broadcast).
-- parameter-table parquet partitioned by ``round`` (the scale spelling):
-  versioning = partition value, and any round is one pruned read.
+``.npy``: ``weights_graphID:{g}_V{cycle}.npy`` (fl_server.py:78-80).
+Here ``ml.federated.federated_fit(weights_sink=...)`` writes a parameter
+table partitioned by ``round`` (versioning = partition value), and any
+round is one pruned read back into the layer list.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from federated_gcn_spark.operators.fedavg import rows_to_weights, weights_to_rows
-
-
-def save_weights_npy(
-    weights: list[np.ndarray], directory: str, graph_id: int, version: int
-) -> str:
-    os.makedirs(directory, exist_ok=True)
-    path = os.path.join(directory, f"weights_graphID_{graph_id}_V{version}.npy")
-    arr = np.empty(len(weights), dtype=object)  # ragged-safe construction
-    arr[:] = [np.asarray(w) for w in weights]
-    np.save(path, arr, allow_pickle=True)
-    return path
-
-
-def load_weights_npy(path: str) -> list[np.ndarray]:
-    return [np.asarray(w, dtype="float64") for w in np.load(path, allow_pickle=True)]
-
-
-def write_weights_table(
-    spark: SparkSession,
-    weights: list[np.ndarray],
-    path: str,
-    round_no: int,
-    client_id: str = "server",
-) -> None:
-    rows = weights_to_rows(weights, client_id=client_id, round_no=round_no)
-    spark.createDataFrame(rows).write.mode("append").partitionBy("round").parquet(path)
+from federated_gcn_spark.operators.fedavg import rows_to_weights
 
 
 def read_weights_table(

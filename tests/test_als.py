@@ -1,5 +1,5 @@
-"""ALS matrix factorization: numpy parity, determinism, recommendation
-shape, rank-1 closed form."""
+"""ALS matrix factorization: numpy parity, determinism, rank-1 closed
+form."""
 
 import numpy as np
 import pytest
@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 from federated_gcn_spark.operators.als import (
     als_fit,
     als_rank1,
-    als_rmse,
     hash_factor,
-    recommend_topk,
 )
 
 
@@ -75,9 +73,13 @@ def test_als_matches_dense_numpy_reference(spark, ratings):
 
 def test_als_reduces_rmse_and_is_layout_independent(spark, ratings):
     uf1, if1 = als_fit(ratings, rank=4, iterations=3)
-    rmse = als_rmse(
-        ratings.select("user", "item", "rating"), uf1, if1
-    )
+    u = {r["user"]: np.array(r["vec"]) for r in uf1.collect()}
+    v = {r["item"]: np.array(r["vec"]) for r in if1.collect()}
+    err = [
+        r["rating"] - u[r["user"]] @ v[r["item"]]
+        for r in ratings.select("user", "item", "rating").collect()
+    ]
+    rmse = float(np.sqrt(np.mean(np.square(err))))
     # mean rating ~3; a rank-4 fit on 12x9 should be well under 1.0
     assert rmse < 1.0
     uf2, if2 = als_fit(ratings.repartition(13, "item"), rank=4, iterations=3)
@@ -85,18 +87,6 @@ def test_als_reduces_rmse_and_is_layout_independent(spark, ratings):
     b = {r["user"]: r["vec"] for r in uf2.collect()}
     for u in a:
         np.testing.assert_allclose(a[u], b[u], rtol=1e-9)
-
-
-def test_recommend_topk_shape_and_order(spark, ratings):
-    uf, itf = als_fit(ratings, rank=4, iterations=2)
-    recs = recommend_topk(uf, itf, k=3, n_users=5).collect()
-    per_user = {}
-    for r in recs:
-        per_user.setdefault(r["user"], []).append(r["score"])
-    assert len(per_user) == 5
-    for scores in per_user.values():
-        assert len(scores) == 3
-        assert scores == sorted(scores, reverse=True)
 
 
 def test_als_rank1_closed_form_hand_check(spark):

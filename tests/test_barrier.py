@@ -168,6 +168,50 @@ def test_barrier_count_probe_on_rewrap_failure(spark, monkeypatch, caplog):
     assert len(_failed_strategies(caplog)) == 1
 
 
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs that ``fn()`` ran, counted through the status tracker."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    outer = [sc.getLocalProperty(k) for k in keys]
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for k, v in zip(keys, outer):
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # tracker is fed async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_barrier_call_runs_one_job_per_upstream_exchange(spark):
+    """Under AQE a lazy barrier still runs every upstream exchange at the
+    call; a probe adds its own exchange and result stage. Each case builds
+    fresh frames: a frame whose exchanges already ran reuses them."""
+
+    def frames():
+        base = spark.range(0, 1000).select(
+            (F.col("id") % 7).alias("k"), F.col("id").alias("v")
+        )
+        return base, base.groupBy("k").agg(F.sum("v").alias("s"))
+
+    cases = {
+        "narrow": lambda base, agg: barrier(base.where("v > 3")),
+        "aggregate": lambda base, agg: barrier(agg),
+        "aggregate_joined_back": lambda base, agg: barrier(base.join(agg, "k")),
+        "probed_aggregate": lambda base, agg: barrier(agg, F.count("*")),
+    }
+    got = {
+        name: _jobs_in_group(spark, f"barrier-jobs-{name}", lambda: fn(*frames()))
+        for name, fn in cases.items()
+    }
+    assert got == {
+        "narrow": 0,
+        "aggregate": 1,
+        "aggregate_joined_back": 2,
+        "probed_aggregate": 3,
+    }
+
+
 def test_luby_coloring_parity_fixed_reference(spark):
     """Pin luby_coloring's exact output on a toy graph: the single
     count-probed barrier round restructure (r11) must not move any vertex's

@@ -12,7 +12,6 @@ from federated_gcn_spark.functions.redact import (
 )
 from federated_gcn_spark.operators.decontam import (
     contamination_report,
-    decontaminate,
 )
 from federated_gcn_spark.operators.pack import (
     _next_fit,
@@ -120,22 +119,11 @@ def test_contamination_report_counts_shared_grams(spark):
     assert hits == {1: 2}
 
 
-def test_decontaminate_drops_only_contaminated(spark):
-    train = _docs(
-        spark,
-        [(1, "the quick brown fox jumps"), (2, "totally unrelated words here")],
-    )
-    eval_df = _docs(spark, [(100, "the quick brown fox")])
-    kept = decontaminate(train, eval_df, n=3)
-    assert [r.doc_id for r in kept.collect()] == [2]
-    assert kept.columns == train.columns
-
-
 def test_decontaminate_short_eval_docs_are_inert(spark):
-    # eval docs shorter than n contribute no grams -> nothing dropped
+    # eval docs shorter than n contribute no grams -> nothing contaminated
     train = _docs(spark, [(1, "a b c d e")])
     eval_df = _docs(spark, [(100, "a b")])
-    assert decontaminate(train, eval_df, n=3).count() == 1
+    assert contamination_report(train, eval_df, n=3).count() == 0
 
 
 # ---------------------------------------------------------------------------

@@ -5,10 +5,9 @@ import pytest
 from federated_gcn_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    minhash_signature,
     ngram_jaccard_pairs,
     simhash,
-    simhash_near_dup_pairs,
+    with_minhash_signature,
 )
 
 
@@ -31,9 +30,7 @@ def test_exact_dedup_keeps_lowest_id(spark, docs):
 def test_minhash_identical_docs_identical_sigs(spark, docs):
     sigs = {
         r["doc_id"]: r["sig"]
-        for r in docs.select(
-            "doc_id", minhash_signature("text", 32).alias("sig")
-        ).collect()
+        for r in with_minhash_signature(docs, num_hashes=32).collect()
     }
     assert sigs[1] == sigs[2]
     assert sigs[1] != sigs[4]
@@ -72,33 +69,6 @@ def test_simhash_hamming_properties(spark, docs):
     ham13 = bin(sigs[1] ^ sigs[3]).count("1")
     ham14 = bin(sigs[1] ^ sigs[4]).count("1")
     assert ham13 < ham14  # near dup closer than unrelated doc
-
-
-def test_simhash_near_dup_pairs(spark, docs):
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dup_pairs(docs, max_hamming=10).collect()
-    }
-    assert pairs[(1, 2)] == 0
-    assert (1, 4) not in pairs
-
-
-def test_simhash_banding_recall_grows_with_bound(spark, docs):
-    # chunk count derives from max_hamming (pigeonhole: k+1 chunks for
-    # Hamming <= k), so a larger bound must find a superset of pairs
-    import pytest
-
-    tight = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_dup_pairs(docs, max_hamming=3).collect()
-    }
-    loose = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_dup_pairs(docs, max_hamming=10).collect()
-    }
-    assert tight <= loose
-    with pytest.raises(ValueError, match="max_hamming"):
-        simhash_near_dup_pairs(docs, max_hamming=63)
 
 
 def test_near_dup_clusters_transitive_closure(spark):

@@ -7,14 +7,28 @@ from federated_gcn_spark.operators.fedavg import (
     fedavg,
     fedavg_arrow,
     rows_to_weights,
-    weights_to_rows,
 )
+
+
+def _weights_to_rows(weights, client_id="driver", num_examples=1):
+    """A Keras-style list-of-ndarrays as parameter-table rows."""
+    return [
+        {
+            "round": 0,
+            "client_id": client_id,
+            "layer": i,
+            "shape": list(w.shape),
+            "values": [float(x) for x in np.asarray(w, dtype="float64").ravel()],
+            "num_examples": num_examples,
+        }
+        for i, w in enumerate(weights)
+    ]
 
 
 def _param_df(spark, clients):
     rows = []
     for cid, (tensors, n) in clients.items():
-        rows += weights_to_rows(tensors, client_id=cid, num_examples=n)
+        rows += _weights_to_rows(tensors, client_id=cid, num_examples=n)
     return spark.createDataFrame(rows)
 
 
@@ -57,7 +71,7 @@ def test_arrow_variant_matches_explode_variant(spark, two_clients):
 
 def test_codec_roundtrip(spark):
     w = [np.arange(6, dtype="float64").reshape(2, 3), np.array([9.0])]
-    back = rows_to_weights(weights_to_rows(w))
+    back = rows_to_weights(_weights_to_rows(w))
     for x, y in zip(back, w):
         np.testing.assert_array_equal(x, y)
         assert x.shape == y.shape

@@ -1,4 +1,5 @@
-"""Incremental aggregate maintenance: merge-of-split == full recompute."""
+"""Incremental aggregate maintenance (merge-of-split == full recompute)
+and MERGE INTO upserts."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -66,84 +67,20 @@ def test_merge_handles_keys_on_one_side_only(spark):
     assert merged[2] == (2, 8.0, 3.0, 5.0)  # merged key combines
 
 
-def test_streaming_agg_state_equals_batch_rollup(spark, tmp_path):
-    """Micro-batched state folding converges to the one-shot rollup."""
-    from federated_gcn_spark.streaming.aggstate import streaming_agg_state
+def test_merge_upsert_applies_deletes(spark):
+    from federated_gcn_spark.operators.upsert import merge_upsert
 
-    df = spark.range(0, 2000).select(
-        F.pmod(F.col("id"), F.lit(23)).alias("k"),
-        (F.xxhash64("id") % 500).cast("double").alias("v"),
-    )
-    src = str(tmp_path / "agg_in")
-    df.repartition(4).write.parquet(src)  # 4 files -> real multi-batch fold
-    state = str(tmp_path / "agg_state")
-
-    q = streaming_agg_state(
-        spark, src, state, ["k"], SPECS, max_files_per_trigger=1
-    )
-    q.awaitTermination(120)
-
-    got = _as_map(spark.read.parquet(state))
-    want = _as_map(agg_state(df, ["k"], SPECS))
-    assert got == want
-
-
-def test_streaming_heavy_hitters_equals_one_shot_sketch(spark, tmp_path):
-    """Micro-batched CMS folding == one-shot sketch over all data, and
-    estimates upper-bound exact counts."""
-    from federated_gcn_spark.operators.cms import cms_counters, cms_estimate
-    from federated_gcn_spark.streaming.heavyhitters import (
-        streaming_heavy_hitters,
-    )
-
-    df = spark.range(0, 5000).select(
-        (F.pmod(F.xxhash64("id"), F.lit(50))).cast("string").alias("term")
-    )
-    src = str(tmp_path / "terms_in")
-    df.repartition(4).write.parquet(src)
-    state = str(tmp_path / "cms_state")
-
-    q = streaming_heavy_hitters(
-        spark, src, state, "term", depth=3, width=32, max_files_per_trigger=1
-    )
-    q.awaitTermination(120)
-
-    streamed = {
-        (r["d"], r["col"]): r["c"]
-        for r in spark.read.parquet(state).collect()
-    }
-    exact = df.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    single = {
-        (r["d"], r["col"]): r["c"]
-        for r in cms_counters(exact, "term", "cnt", depth=3, width=32).collect()
-    }
-    assert streamed == single
-    est = {
-        r["term"]: r["cms_est"]
-        for r in cms_estimate(
-            exact.select("term"), spark.read.parquet(state), "term",
-            depth=3, width=32,
-        ).collect()
-    }
-    for r in exact.collect():
-        assert est[r["term"]] >= r["cnt"]  # CMS never undercounts
-
-
-def test_upsert_parquet_swaps_snapshot_and_applies_deletes(spark, tmp_path):
-    from federated_gcn_spark.operators.upsert import upsert_parquet
-
-    path = str(tmp_path / "snap")
-    spark.createDataFrame(
+    base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    ).write.parquet(path)
+    )
     updates = spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string")
     deletes = spark.createDataFrame([(3,), (4,)], "k long")
-    upsert_parquet(spark, path, updates, ["k"], deletes=deletes)
-    got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
+    got = {
+        (r["k"], r["v"])
+        for r in merge_upsert(base, updates, ["k"], deletes=deletes).collect()
+    }
     # 1 carried, 2 updated, 3 deleted, 4 deleted-before-insert
     assert got == {(1, "a"), (2, "B")}
-    import os
-    assert not [d for d in os.listdir(tmp_path) if "__" in d]  # no debris
 
 
 def test_merge_upsert_dedupes_update_batch(spark):
@@ -169,71 +106,3 @@ def test_merge_upsert_dedupes_update_batch(spark):
     # deterministic winner: greatest (v, t) struct
     m = {r["k"]: (r["v"], r["t"]) for r in without}
     assert m[2] == ("z", 5) and m[3] == ("d", 1)
-
-
-def test_versioned_upsert_time_travel_and_vacuum(spark, tmp_path):
-    """Three versions, each readable AS OF; vacuum drops history and a
-    dropped version read raises."""
-    import pytest as _pytest
-
-    from federated_gcn_spark.operators.upsert import (
-        create_snapshot,
-        read_snapshot,
-        snapshot_versions,
-        upsert_versioned,
-        vacuum_snapshots,
-    )
-
-    tdir = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, val string"
-    )
-    assert create_snapshot(spark, tdir, base) == 0
-    up1 = spark.createDataFrame([(2, "B"), (4, "d")], "id long, val string")
-    assert upsert_versioned(spark, tdir, up1, ["id"]) == 1
-    dels = spark.createDataFrame([(1,)], "id long")
-    up2 = spark.createDataFrame([(5, "e")], "id long, val string")
-    assert upsert_versioned(spark, tdir, up2, ["id"], deletes=dels) == 2
-    assert snapshot_versions(tdir) == [0, 1, 2]
-
-    def state(v):
-        return sorted(
-            map(tuple, read_snapshot(spark, tdir, v).collect())
-        )
-
-    assert state(0) == [(1, "a"), (2, "b"), (3, "c")]
-    assert state(1) == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
-    assert state(2) == [(2, "B"), (3, "c"), (4, "d"), (5, "e")]
-    # latest by default
-    assert sorted(map(tuple, read_snapshot(spark, tdir).collect())) == state(2)
-
-    assert vacuum_snapshots(tdir, keep_last=1) == [0, 1]
-    assert snapshot_versions(tdir) == [2]
-    with _pytest.raises(ValueError):
-        read_snapshot(spark, tdir, 0)
-
-
-def test_snapshot_diff_cdc(spark, tmp_path):
-    from federated_gcn_spark.operators.upsert import (
-        create_snapshot,
-        snapshot_diff,
-        upsert_versioned,
-    )
-
-    tdir = str(tmp_path / "tbl2")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, val string"
-    )
-    create_snapshot(spark, tdir, base)
-    upsert_versioned(
-        spark,
-        tdir,
-        spark.createDataFrame([(2, "B"), (4, "d")], "id long, val string"),
-        ["id"],
-        deletes=spark.createDataFrame([(3,)], "id long"),
-    )
-    diff = {
-        (r["id"], r["change_type"])
-        for r in snapshot_diff(spark, tdir, 0, 1, ["id"]).collect()
-    }
-    assert diff == {(2, "update"), (3, "delete"), (4, "insert")}

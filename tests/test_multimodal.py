@@ -11,11 +11,11 @@ from federated_gcn_spark.functions.codecs import (
     encode_wav,
     image_grid_features,
 )
-from federated_gcn_spark.operators.multimodal import (
-    audio_chunk_stats,
-    frame_sample_plan,
-    image_features,
-    make_media_table,
+from federated_gcn_spark.operators.multimodal import image_features
+
+MEDIA_SCHEMA = (
+    "media_id long, kind string, payload binary, meta struct<width int, "
+    "height int, channels int, sample_rate int, n_frames int, format string>"
 )
 
 
@@ -27,7 +27,7 @@ def media(spark):
         (3, "video", b"fakevideo", (640, 480, 3, None, 25, "mp4")),
         (4, "audio", b"a" * 2500, (None, None, 1, 16000, None, "wav")),
     ]
-    return make_media_table(spark, rows)
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_image_features_shape_and_determinism(spark, media):
@@ -78,7 +78,7 @@ def test_real_decoder_end_to_end(spark):
         (2, "audio", encode_wav(pcm, 16000), (None, None, 1, 16000, None, "wav")),
         (3, "image", b"corruptbytes", (0, 0, 0, None, None, "bin")),
     ]
-    media = make_media_table(spark, rows)
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     out = {r["media_id"]: r for r in image_features(media, n_features=16, decoder="real").collect()}
     assert out[1]["decoded_ok"] and out[2]["decoded_ok"]
     assert not out[3]["decoded_ok"] and out[3]["features"] == [0.0] * 16
@@ -123,43 +123,3 @@ def test_encode_decode_features_numpy_parity_and_errors(spark):
     assert out[2]["decoded_ok"] == 1 and out[2]["n_payload_bytes"] == 300
     assert out[3]["decoded_ok"] == 0 and out[3]["n_payload_bytes"] == 0
     assert [out[3][f"f{i}"] for i in range(4)] == [0, 0, 0, 0]
-
-
-def test_frame_sample_plan(spark, media):
-    frames = frame_sample_plan(media, every_n=10).collect()
-    assert [r["frame_index"] for r in frames] == [0, 10, 20]
-    assert all(r["media_id"] == 3 for r in frames)
-
-
-def test_audio_chunk_stats(spark, media):
-    chunks = audio_chunk_stats(media, chunk_bytes=1024).orderBy("chunk_index").collect()
-    assert [r["n_bytes"] for r in chunks] == [1024, 1024, 452]  # 2500 bytes
-    assert all(r["media_id"] == 4 for r in chunks)
-
-
-def test_resize_images_nearest_neighbor_exact(spark):
-    """Downsampling a known gradient must pick exactly the pixels the
-    integer nearest-neighbor map selects, and re-encode losslessly;
-    garbage payloads come back flagged, not failed."""
-    import numpy as np
-
-    from federated_gcn_spark.functions.codecs import decode_bmp, encode_bmp
-    from federated_gcn_spark.operators.multimodal import resize_images
-
-    px = np.zeros((8, 6, 3), dtype=np.uint8)
-    for r in range(8):
-        for c in range(6):
-            px[r, c] = (r * 30, c * 40, (r + c) * 10)
-    good = encode_bmp(px)
-    media = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(b"not a bmp"))],
-        "media_id long, payload binary",
-    )
-    rows = {r["media_id"]: r for r in resize_images(media, 4, 3).collect()}
-    assert rows[2]["resized_ok"] is False and bytes(rows[2]["payload"]) == b""
-    assert rows[1]["resized_ok"] is True
-    out = decode_bmp(bytes(rows[1]["payload"]))
-    assert out.shape == (4, 3, 3)
-    r_idx = (np.arange(4) * 8) // 4
-    c_idx = (np.arange(3) * 6) // 3
-    np.testing.assert_array_equal(out, px[r_idx][:, c_idx])

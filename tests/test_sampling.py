@@ -1,7 +1,6 @@
 """Seeded random walks + fanout sampling: shape, validity, determinism."""
 
 from federated_gcn_spark.graph import fanout_sample, uniform_random_walks
-from federated_gcn_spark.graph.sampling import walk_context_pairs
 
 
 def _walks_as_dict(walks):
@@ -36,13 +35,6 @@ def test_walk_determinism_and_seed_sensitivity(spark, toy_graph):
     assert w1 == w2  # same seed ⇒ identical walks, any layout
     w3 = _walks_as_dict(uniform_random_walks(toy_graph, length=5, seed=8))
     assert w1 != w3  # different seed ⇒ (overwhelmingly) different walks
-
-
-def test_walk_context_pairs(spark, toy_graph):
-    walks = uniform_random_walks(toy_graph, length=3, seed=7)
-    pairs = walk_context_pairs(walks, window=2)
-    assert pairs.count() > 0
-    assert pairs.where("target = context").count() >= 0  # may revisit: allowed
 
 
 def test_fanout_sample_caps_children(spark, toy_graph):

@@ -3,17 +3,13 @@ fixture files (CORA-shaped, tiny)."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from federated_gcn_spark.plans.pipelines import concat_embeddings_pipeline, merge_pipeline
 from federated_gcn_spark.sources import (
-    load_weights_npy,
-    read_edge_csv,
-    read_node_csv,
     read_raw_attributes,
     read_raw_edges,
-    save_weights_npy,
     read_weights_table,
-    write_weights_table,
 )
 
 F_DIM = 4  # stand-in for CORA's 1433
@@ -37,8 +33,6 @@ def ref_files(tmp_path_factory):
     )
     (d / "g_0").write_text("1 2\n2 3\n")
     (d / "g_centralstore_0").write_text("3 4\n2 3\n")
-    (d / "nodes.csv").write_text("id,0,1,2,3\n7,1,0,1,0\n8,0,1,0,1\n")
-    (d / "edges.csv").write_text("source,target\n7,8\n")
     return d
 
 
@@ -53,13 +47,6 @@ def test_read_raw_attributes(spark, ref_files):
 def test_read_raw_edges(spark, ref_files):
     df = read_raw_edges(spark, str(ref_files / "g_0"))
     assert sorted((r["src"], r["dst"]) for r in df.collect()) == [(1, 2), (2, 3)]
-
-
-def test_read_node_and_edge_csv(spark, ref_files):
-    nodes = read_node_csv(spark, str(ref_files / "nodes.csv"))
-    assert {r["id"]: r["features"] for r in nodes.collect()}[7] == [1.0, 0.0, 1.0, 0.0]
-    edges = read_edge_csv(spark, str(ref_files / "edges.csv"))
-    assert [(r["src"], r["dst"]) for r in edges.collect()] == [(7, 8)]
 
 
 def test_merge_pipeline_end_to_end(spark, ref_files, tmp_path):
@@ -79,28 +66,34 @@ def test_merge_pipeline_end_to_end(spark, ref_files, tmp_path):
     assert set(node_rows) == {1, 2, 3, 4}
     # bag union keeps the duplicated (2,3) edge (merge.py:40)
     assert edges.count() == 4
-    # sinks round-trip through the reference CSV layout
-    back = read_node_csv(spark, str(tmp_path / "out_nodes"))
-    assert {r["id"]: r["features"] for r in back.collect()} == node_rows
-    back_e = read_edge_csv(spark, str(tmp_path / "out_edges"))
-    assert back_e.count() == 4
-
-
-def test_weights_npy_roundtrip(tmp_path):
-    w = [np.arange(6, dtype="float64").reshape(2, 3), np.array([1.0, 2.0])]
-    path = save_weights_npy(w, str(tmp_path / "wts"), graph_id=4, version=2)
-    assert path.endswith("weights_graphID_4_V2.npy")
-    back = load_weights_npy(path)
-    for a, b in zip(back, w):
-        np.testing.assert_array_equal(a, b)
+    # sinks round-trip through the reference CSV layout: header
+    # ``id,0,..,F-1`` for nodes and ``source,target`` for edges
+    back = spark.read.option("header", True).csv(str(tmp_path / "out_nodes"))
+    assert back.columns == ["id", *map(str, range(F_DIM))]
+    assert {
+        int(r["id"]): [float(r[str(i)]) for i in range(F_DIM)]
+        for r in back.collect()
+    } == node_rows
+    back_e = spark.read.option("header", True).csv(str(tmp_path / "out_edges"))
+    assert back_e.columns == ["source", "target"] and back_e.count() == 4
 
 
 def test_weights_table_roundtrip(spark, tmp_path):
     w = [np.array([[1.0, 2.0]]), np.array([3.0])]
     p = str(tmp_path / "param_table")
-    write_weights_table(spark, w, p, round_no=0)
+
+    def write(weights, round_no):
+        # the layout federated_fit(weights_sink=...) appends per round
+        rows = [(i, list(x.shape), x.ravel().tolist()) for i, x in enumerate(weights)]
+        spark.createDataFrame(
+            rows, "layer int, shape array<int>, values array<double>"
+        ).withColumn("round", F.lit(round_no)).write.mode("append").partitionBy(
+            "round"
+        ).parquet(p)
+
+    write(w, 0)
     w2 = [x * 2 for x in w]
-    write_weights_table(spark, w2, p, round_no=1)
+    write(w2, 1)
     latest, df = read_weights_table(spark, p)  # defaults to max round
     for a, b in zip(latest, w2):
         np.testing.assert_array_equal(a, b)
@@ -182,21 +175,3 @@ def test_curate_corpus_sampling_is_doc_level(spark):
 
     per_doc = Counter(r["doc_id"] for r in rows)
     assert all(c == 4 for c in per_doc.values())
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC sink/source roundtrip; the read plan shows pushed filters and
-    pruned columns, same as parquet."""
-    from federated_gcn_spark.sources.orc import read_orc, write_orc
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "docs_orc")
-    write_orc(docs, path, bloom_filter_cols=["doc_id"])
-    back = read_orc(spark, path, schema=docs.schema)
-    assert back.count() == docs.count()
-    assert {r["doc_id"] for r in back.select("doc_id").collect()} == {
-        r["doc_id"] for r in docs.select("doc_id").collect()
-    }
-    q = back.where(back.doc_id == 7).select("doc_id", "lang")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "doc_id" in plan

@@ -1,5 +1,4 @@
-"""Round-4 wave-27: storage-audit queries vs python references, plus
-the ORC source/sink roundtrip."""
+"""Round-4 wave-27: storage-audit queries vs python references."""
 
 from collections import Counter
 
@@ -105,34 +104,3 @@ def test_shard_balance_hash_beats_range_or_close(spark):
     assert 1.0 <= r["hash_max_over_mean"] < 2.5  # ~16 docs/shard at sf0.001
     assert 1.0 <= r["range_max_over_mean"] < 2.5
     assert r["hash_chi2"] >= 0 and r["range_chi2"] >= 0
-
-
-def test_orc_roundtrip(spark, tmp_path):
-    from federated_gcn_spark.catalog import load_table
-    from federated_gcn_spark.sources.orc import read_orc, write_orc
-
-    docs = load_table(spark, SF_DIR, "documents")
-    path = str(tmp_path / "docs_orc")
-    write_orc(docs, path)
-    back = read_orc(spark, path, schema=docs.schema)
-    assert back.schema == docs.schema
-    assert back.count() == docs.count()
-    a = {r["doc_id"]: r["n_chars"] for r in docs.select("doc_id", "n_chars").collect()}
-    b = {r["doc_id"]: r["n_chars"] for r in back.select("doc_id", "n_chars").collect()}
-    assert a == b
-
-
-def test_orc_predicate_pushdown_plan(spark, tmp_path):
-    """Filter must reach the ORC scan as a pushed filter."""
-    from federated_gcn_spark.catalog import load_table
-    from federated_gcn_spark.sources.orc import read_orc, write_orc
-    import pyspark.sql.functions as F
-
-    docs = load_table(spark, SF_DIR, "documents")
-    path = str(tmp_path / "docs_orc_pd")
-    write_orc(docs, path)
-    q = read_orc(spark, path).where(F.col("doc_id") == 42).select("doc_id")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "doc_id" in plan.split(
-        "PushedFilters"
-    )[1][:80]

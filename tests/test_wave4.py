@@ -597,133 +597,6 @@ def test_benford_chi2_and_counts(spark):
     assert rows[0]["chi2"] > 100
 
 
-def test_streaming_velocity_equals_batch(spark, tmp_path):
-    """Chronological micro-batches through the stateful streaming
-    velocity rule must end at exactly the batch burst_detection rollup
-    (two availableNow runs against one checkpoint = two batches)."""
-    import os
-
-    from federated_gcn_spark.catalog import load_table
-    from federated_gcn_spark.plans.queries import _event_epoch_sec
-    from federated_gcn_spark.streaming.velocity import streaming_velocity
-    from pyspark.sql import functions as F
-
-    events = load_table(spark, SF_DIR, "events")
-    ev = events.select(
-        "user_id", _event_epoch_sec(events).alias("sec"), "value"
-    )
-    cut = ev.agg(F.expr("percentile_approx(sec, 0.5)")).collect()[0][0]
-    events_dir = str(tmp_path / "events")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(events_dir)
-
-    out_dir = str(tmp_path / "out")
-
-    def run_batchfile(df, name):
-        df.coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / name)
-        )
-        # move the parquet part into the watched dir as one new file
-        import glob, shutil
-
-        part = glob.glob(str(tmp_path / name / "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(events_dir, f"{name}.parquet"))
-        out = streaming_velocity(spark, events_dir)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run_batchfile(ev.where(F.col("sec") <= cut), "b1")
-    run_batchfile(ev.where(F.col("sec") > cut), "b2")
-    # n_events is monotone per user: the max-n_events row is the final one
-    final = {}
-    for r in spark.read.parquet(out_dir).collect():
-        cur = final.get(r["user_id"])
-        if cur is None or r["n_events"] > cur["n_events"]:
-            final[r["user_id"]] = r
-
-    # inline batch twin (the registered query's shape without the
-    # HAVING >= 5 prune, and with the same threshold=5 burst count)
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("sec")
-        .rangeBetween(-600, Window.currentRow)
-    )
-    win = ev.select(
-        "user_id",
-        F.count(F.lit(1)).over(w).alias("burst_n"),
-        F.sum("value").over(w).alias("burst_value"),
-    )
-    batch = {
-        r["user_id"]: r
-        for r in win.groupBy("user_id")
-        .agg(
-            F.max("burst_n").alias("peak_burst"),
-            F.count_if(F.col("burst_n") >= 5).alias("n_burst_events"),
-            F.max("burst_value").alias("peak_burst_value"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .collect()
-    }
-    assert batch, "batch rollup unexpectedly empty"
-    assert set(final) == set(batch)
-    for uid, b in batch.items():
-        s = final[uid]
-        assert s["peak_burst"] == b["peak_burst"], uid
-        assert s["n_burst_events"] == b["n_burst_events"], uid
-        assert s["n_events"] == b["n_events"], uid
-        assert abs(s["peak_value"] - b["peak_burst_value"]) < 1e-6, uid
-        assert s["n_late"] == 0, uid
-
-
-def test_velocity_fn_flags_and_drops_late_events():
-    """An out-of-order micro-batch (seconds below the state's
-    max_seen_sec) must be dropped explicitly and counted in n_late, not
-    silently merged into an already-evicted window (round-3 ADVICE
-    fix)."""
-    import pandas as pd
-
-    from federated_gcn_spark.streaming.velocity import _velocity_fn
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    fn = _velocity_fn(window_sec=600, threshold=3)
-    st = FakeState()
-    key = (7,)
-    b1 = pd.DataFrame({"user_id": [7] * 3, "sec": [100, 200, 5000],
-                       "value": [1.0, 1.0, 1.0]})
-    out1 = next(fn(key, iter([b1]), st)).iloc[0]
-    assert out1["n_events"] == 3 and out1["n_late"] == 0
-    # batch 2 arrives with one late event (sec 300 < max_seen 5000)
-    b2 = pd.DataFrame({"user_id": [7] * 2, "sec": [300, 5100],
-                       "value": [9.0, 1.0]})
-    out2 = next(fn(key, iter([b2]), st)).iloc[0]
-    assert out2["n_late"] == 1
-    assert out2["n_events"] == 4  # late row excluded from counters
-    assert out2["peak_value"] < 9.0  # its value never entered a window
-
-
 def test_exact_dedup_clusters_match_union_find(spark):
     """Fixed-round label propagation must reach the TRUE components of
     the pair graph (union-find reference), i.e. the round count with

@@ -1,11 +1,9 @@
-"""Table catalog over the driver testdata + the engine's graph-store layout.
+"""Table catalog over the driver testdata.
 
 The reference's "catalog" is a filename template —
 ``{path}{graph_id}_nodes_{partition_id}.csv`` (fl_server.py:202,
-fl_client.py:194). Here that becomes (a) a plain loader for the driver's
-parquet tables and (b) a Hive-partitioned parquet graph store
-(``.../graph_id=G/partition_id=P/``) so partition pruning replaces string
-formatting (SURVEY.md §1.3).
+fl_client.py:194). Here it is a loader for the driver's parquet tables and
+a SQL front door that registers them as temp views.
 """
 
 from __future__ import annotations
@@ -88,115 +86,3 @@ def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
         if os.path.exists(p):
             spark.read.parquet(p).createOrReplaceTempView(n)
     return spark.sql(query)
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    path: str,
-    bucket_cols: list[str],
-    num_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed parquet table (external, at ``path``).
-
-    Bucketing pre-shuffles the data once at write time: any join or
-    aggregation keyed on ``bucket_cols`` between tables sharing the
-    layout runs Exchange-free — at 100 TB that turns the repeated
-    fact⋈fact join (the one shuffle Catalyst can't avoid in
-    flagship_revenue-shaped queries) into a co-located merge. ``sort_cols``
-    additionally pre-sorts within buckets so sort-merge joins skip their
-    sort. Verified by tests/test_catalog.py asserting the joined plan
-    contains no Exchange.
-    """
-    writer = (
-        df.write.mode(mode)
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(name)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files; returns the
-    new file count.
-
-    Streaming sinks and fine-grained incremental writes accrete small
-    files; at scale the scan cost becomes file-open-bound (every file is
-    a footer read + task schedule) long before it is byte-bound.
-    Sizing uses the actual on-disk bytes, and ``sort_within_by``
-    re-sorts within output files so min/max row-group statistics stay
-    selective for downstream predicate skipping. The rewrite goes
-    through a temp dir then a rename-aside swap (old dir moved aside
-    before the new one moves in), so a crash at any point leaves a fully
-    intact copy of the data on disk; callers must still quiesce readers
-    across the swap.
-    """
-    import shutil
-
-    size_b = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _dn, fns in os.walk(path)
-        for f in fns
-        if not f.startswith(("_", "."))
-    )
-    n_files = max(1, round(size_b / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    base = path.rstrip("/")
-    tmp = base + "__compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    # Swap via rename-aside: at no point is the live path missing its data.
-    # A crash after the first rename leaves the dataset at `__old` (fully
-    # intact, recoverable); a crash after the second leaves the new data
-    # live plus a stale `__old` to garbage-collect. Concurrent readers must
-    # still quiesce across the swap (renames are atomic per-path, not as a
-    # pair).
-    old = base + "__compact_old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n_files
-
-
-# ---------------------------------------------------------------------------
-# Partitioned graph store (nodes/edges as Hive-partitioned parquet)
-# ---------------------------------------------------------------------------
-
-def write_graph(
-    nodes: DataFrame,
-    edges: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a (possibly multi-graph, multi-partition) graph.
-
-    Layout: ``{path}/nodes/graph_id=G/partition_id=P/*.parquet`` — the Spark
-    equivalent of the reference's per-partition CSV files. Reading one
-    partition is partition *pruning*, not a filename lookup, and a scan over
-    all partitions is a single parquet read.
-    """
-    part_cols = [c for c in ("graph_id", "partition_id") if c in nodes.columns]
-    w = nodes.write.mode(mode)
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(os.path.join(path, "nodes"))
-
-    part_cols = [c for c in ("graph_id", "partition_id") if c in edges.columns]
-    w = edges.write.mode(mode)
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(os.path.join(path, "edges"))

@@ -3,8 +3,8 @@
 Real byte-level decoders for two self-describing uncompressed formats —
 24-bit BI_RGB BMP and 16-bit PCM WAV — written against the public format
 specs with numpy only, so the multimodal pipeline decodes REAL bytes
-end-to-end without PIL/ffmpeg. The matching encoders exist so tests can
-round-trip arbitrary arrays through genuine on-disk bytes.
+end-to-end without PIL/ffmpeg. The matching encoders round-trip arrays
+through genuine on-disk bytes.
 
 These run inside Arrow-batched ``mapInPandas`` kernels (see
 operators/multimodal.py): one Python call per payload, vectorized numpy
@@ -123,52 +123,3 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
     else:
         s = s[:, None]
     return int(sample_rate), s
-
-
-# ---------------------------------------------------------------------------
-# feature extraction on decoded media → fixed-width vectors
-# ---------------------------------------------------------------------------
-
-
-def image_grid_features(pixels: np.ndarray, n_features: int) -> np.ndarray:
-    """(H, W, 3) uint8 → n_features floats: grayscale block-mean pooling
-    over a ⌈√n⌉×⌈√n⌉ grid (the classic thumbnail-pool baseline), values
-    in [0, 1]. Deterministic, shape-independent."""
-    g = np.asarray(pixels, dtype="float64") @ np.array([0.299, 0.587, 0.114])
-    side = int(np.ceil(np.sqrt(n_features)))
-    h, w = g.shape
-    ys = np.linspace(0, h, side + 1).astype(int)
-    xs = np.linspace(0, w, side + 1).astype(int)
-    out = np.zeros(side * side)
-    for i in range(side):
-        for j in range(side):
-            block = g[ys[i] : max(ys[i + 1], ys[i] + 1), xs[j] : max(xs[j + 1], xs[j] + 1)]
-            out[i * side + j] = block.mean() / 255.0
-    return out[:n_features]
-
-
-def audio_frame_features(samples: np.ndarray, n_features: int) -> np.ndarray:
-    """(N, C) int16 → n_features floats: per-frame RMS energy over
-    n_features equal time slices of the mono mix, normalized to [0, 1]."""
-    mono = np.asarray(samples, dtype="float64").mean(axis=1) / 32768.0
-    if len(mono) == 0:
-        return np.zeros(n_features)
-    bounds = np.linspace(0, len(mono), n_features + 1).astype(int)
-    out = np.zeros(n_features)
-    for i in range(n_features):
-        frame = mono[bounds[i] : max(bounds[i + 1], bounds[i] + 1)]
-        out[i] = float(np.sqrt(np.mean(frame * frame)))
-    return out
-
-
-def real_media_features(payload: bytes, n_features: int) -> np.ndarray:
-    """Magic-byte dispatch: BMP → grid pooling, WAV → frame energies.
-
-    Raises ValueError for unknown/corrupt payloads — image_features turns
-    that into decoded_ok=False, the per-row error contract."""
-    if payload[:2] == b"BM":
-        return image_grid_features(decode_bmp(payload), n_features)
-    if payload[:4] == b"RIFF":
-        _, samples = decode_wav(payload)
-        return audio_frame_features(samples, n_features)
-    raise ValueError("unknown media format (expected BMP or WAV magic)")

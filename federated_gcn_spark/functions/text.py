@@ -42,20 +42,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def marker_hits(text: Column | str, markers: tuple[str, ...]) -> Column:
-    """# tokens that are in the marker set (case-insensitive)."""
-    toks = F.transform(tokens(text), F.lower)
-    arr = F.array(*[F.lit(m) for m in markers])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-
-def stopword_ratio(text: Column | str) -> Column:
-    n = token_count(text)
-    return F.when(n > 0, marker_hits(text, STOPWORDS).cast("double") / n).otherwise(
-        F.lit(0.0)
-    )
-
-
 def punct_ratio(text: Column | str) -> Column:
     """# punctuation chars / # chars (0 for empty text)."""
     text = F.col(text) if isinstance(text, str) else text
@@ -68,7 +54,7 @@ def punct_ratio(text: Column | str) -> Column:
 
 def quality_score(text: Column | str) -> Column:
     """Composite [0,1] doc-quality heuristic:
-    0.4·min(1, tokens/64) + 0.3·(1 − punct_ratio) + 0.3·min(1, 4·stopword_ratio)
+    0.4·min(1, tokens/64) + 0.3·(1 − punct_ratio) + 0.3·min(1, 4·stopwords/tokens)
 
     Single pass over the token array: token count and stopword hits
     accumulate in one `aggregate` with a struct accumulator, and the

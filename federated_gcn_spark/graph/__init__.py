@@ -11,6 +11,6 @@ from federated_gcn_spark.graph.pagerank import (  # noqa: F401
 )
 from federated_gcn_spark.graph.anf import neighborhood_function  # noqa: F401
 from federated_gcn_spark.graph.bfs import bfs_distances  # noqa: F401
-from federated_gcn_spark.graph.kcore import core_numbers, k_core  # noqa: F401
+from federated_gcn_spark.graph.kcore import core_numbers  # noqa: F401
 from federated_gcn_spark.graph.labelprop import label_propagation  # noqa: F401
 from federated_gcn_spark.graph.sampling import node2vec_walks  # noqa: F401

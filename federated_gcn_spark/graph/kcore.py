@@ -1,4 +1,4 @@
-"""k-core decomposition: coreness numbers and the k-core subgraph.
+"""k-core decomposition: the coreness number of every vertex.
 
 The reference never computes cores, but a training-data graph pipeline
 needs them constantly (junk-vertex pruning before sampling, community
@@ -22,11 +22,8 @@ length. Two shuffles per round (message join + histogram agg); lineage
 and carried stats cut per round by the barrier, whose materializing
 job also computes the convergence probe sum(c): unchanged means done
 (the sum strictly decreases until the fixpoint — no driver-side vertex
-collection). Both loops raise ``NotConverged`` at their round cap.
-
-``k_core`` peels directly: repeatedly delete vertices with degree < k.
-Rounds are bounded by the peeling depth, each round one degree aggregate
-+ one semi join on the surviving vertex set.
+collection). The loop raises ``NotConverged`` at its round cap. The
+k-core subgraph is the edges whose two ends both have coreness >= k.
 """
 
 from __future__ import annotations
@@ -82,23 +79,3 @@ def core_numbers(
         prev_sum = cur_sum
     return cur.select(ID, F.col("c").alias("coreness"))
 
-
-def k_core(graph: Graph, k: int, max_iterations: int = 100) -> Graph:
-    """The maximal subgraph where every vertex has (undirected) degree >= k."""
-    edges = graph.symmetrized_edges().select(SRC, DST).distinct()
-    edges, (n_prev,) = barrier(edges, F.count(F.lit(1)))
-    for _ in rounds("graph.kcore.k_core", max_iterations):
-        deg = edges.groupBy(F.col(SRC).alias(ID)).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        survivors = deg.where(F.col("deg") >= k).select(ID)
-        pruned = (
-            edges.join(survivors.withColumnRenamed(ID, SRC), SRC, "left_semi")
-            .join(survivors.withColumnRenamed(ID, DST), DST, "left_semi")
-        )
-        edges, (n_now,) = barrier(pruned, F.count(F.lit(1)))
-        if n_now == n_prev:
-            break
-        n_prev = n_now
-    vertices = edges.select(F.col(SRC).alias(ID)).distinct()
-    return Graph(vertices, edges)

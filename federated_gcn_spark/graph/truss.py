@@ -43,8 +43,8 @@ AQE-skew-splittable, nothing driver-side except the per-round count.
 
 ``ktruss_trace`` runs a FIXED number of rounds (filling the tail once
 converged — peeling a fixpoint is the identity, so the fill is exact,
-not an approximation) to stay replayable by an unrolled SQL oracle;
-``k_truss`` is the early-exit twin returning the final edge set.
+not an approximation) to stay replayable by an unrolled SQL oracle; once
+converged, its last ``n_edges`` is the size of the k-truss.
 """
 
 from __future__ import annotations
@@ -52,32 +52,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.barrier import rounds
 from federated_gcn_spark.graph.triangles import (
     _oriented_wedge_triangles,
     oriented_by_degree,
     undirected_edges,
 )
-
-
-def edge_support(und: DataFrame) -> DataFrame:
-    """Per-edge triangle count over a canonical (a < b) edge set.
-
-    Edges in no triangle are absent from the output (support 0).
-    """
-    tri = _oriented_wedge_triangles(oriented_by_degree(und))
-    corners = (
-        tri.select(F.col("u").alias("p"), F.col("x").alias("q"))
-        .unionAll(tri.select(F.col("u").alias("p"), F.col("y").alias("q")))
-        .unionAll(tri.select(F.col("x").alias("p"), F.col("y").alias("q")))
-    )
-    return (
-        corners.select(
-            F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b")
-        )
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("support"))
-    )
 
 
 def _edge_structs(t):
@@ -217,25 +196,6 @@ def _decrement_round(state: DataFrame, k: int) -> DataFrame:
         .distinct()
     )
     return _apply_dec(state, _dec_from_killed(killed), k)
-
-
-def k_truss(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
-    """Early-exit k-truss: canonical (a, b) edges of the k-truss subgraph;
-    ``NotConverged`` if an edge is still weak after ``max_rounds`` peels."""
-    if k < 3:
-        raise ValueError(f"k-truss needs k >= 3, got {k}")
-    if max_rounds < 1:
-        return undirected_edges(edges)
-    cur = undirected_edges(edges).localCheckpoint()
-    state = None
-    for _ in rounds("graph.truss.k_truss", max_rounds):
-        peel = _first_round(cur, k) if state is None else _decrement_round(state, k)
-        state = peel.localCheckpoint()
-        # the dead count is a filter over the checkpointed state — one
-        # cheap scan decides convergence BEFORE paying a delta round
-        if state.where(F.col("s") < k - 2).limit(1).count() == 0:
-            break
-    return state.select("a", "b")
 
 
 def ktruss_trace(

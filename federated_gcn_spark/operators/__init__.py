@@ -5,10 +5,7 @@ from federated_gcn_spark.operators.merge import (  # noqa: F401
     union_all,
     union_keep_first,
 )
-from federated_gcn_spark.operators.sample import (  # noqa: F401
-    deterministic_sample,
-    stratified_sample,
-)
+from federated_gcn_spark.operators.sample import stratified_sample  # noqa: F401
 from federated_gcn_spark.operators.schedule import (  # noqa: F401
     partition_stats,
     plan_training_waves,

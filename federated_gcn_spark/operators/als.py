@@ -8,45 +8,25 @@ u ordered of part i.
 
 Scale design — factors move, ratings don't:
 
-- The normal-equation accumulation is the expensive part: for each user
-  ``A_u = sum_i v_i v_i^T + lam*I`` and ``b_u = sum_i r_ui v_i``.  It is
-  expressed as a ratings⋈item-factor equi-join followed by a
-  posexplode + partial-final SUM per (user, cell) — all JVM codegen; the
-  exchange carries k*(k+1) doubles per user, never the vectors.
+- Each half-step is a ratings⋈factor equi-join followed by flat
+  codegen'd SUM aggregates per key (the normal-equation entries
+  ``b_u = sum_i r_ui v_i`` and the upper triangle of ``sum_i v_i v_i^T``):
+  one shuffle with map-side partial combine, never the vectors.
 - The factor side of that join BROADCASTS by default
-  (``broadcast_factors=True``): a factor table is k doubles per key —
-  ~80 MB at 10M keys, rank 8 — so the big ratings table is never
-  re-exchanged for the join; the only per-half-step shuffle is the
-  map-side-combined normal-equation partials (k*(k+1)/2 + k doubles per
-  key).  Measured at 10× data this is ~1.4× faster end-to-end than the
-  sort-merge spelling, which re-shuffled + re-sorted ratings twice per
-  iteration.  Past ~10⁸ keys per side, pass ``broadcast_factors=False``
-  and co-locate via bucketed storage (a localCheckpoint does NOT retain
-  hash partitioning — its LogicalRDD reports no outputPartitioning, so
-  in-memory pre-partitioning cannot carry co-location across steps).
-- The k x k solves are embarrassingly tiny; they run on Arrow batches in
-  ``mapInPandas`` with ONE batched ``np.linalg.solve`` per batch
-  (stacked [B, k, k] tensors), not per-row Python.
-- Each half-iteration is the same two-shuffle shape with user/item roles
-  swapped; lineage is cut per iteration (localCheckpoint) exactly like
-  the other iterative operators (components, pagerank, Borůvka).
+  (``broadcast_factors=True``): a factor table is k doubles per key, so
+  the big ratings table is never re-exchanged for the join.
 - Factor init is hash-derived ((pmod(xxhash64(id, dim), 2001) - 1000) /
-  2000): layout-independent, seedable, and — for the rank-1 twin —
-  replayable in a SQL oracle.
+  2000): layout-independent, seedable and replayable in a SQL oracle.
 
-``als_rank1`` is the closed-form special case (k = 1: the solve is a
-scalar division), expressible entirely in fixed-order arithmetic; its
-factors are ROUND()ed each half-iteration so an engine-independent
-oracle re-derives them exactly (the rounding RESYNCS both engines every
-iteration — accumulated FP summation-order error ~1e-12 is crushed
-against the 5e-5 rounding boundary).  test_als.py pins the rank-k path
-against a dense numpy ALS on the same init.
+``als_rank1`` (k = 1: the solve is a scalar division) and ``als_rank2``
+(closed-form 2x2 solves) are expressible entirely in fixed-order
+arithmetic; their factors are ROUND()ed each half-iteration so an
+engine-independent oracle re-derives them exactly (the rounding RESYNCS
+both engines every iteration — accumulated FP summation-order error
+~1e-12 is crushed against the 5e-5 rounding boundary).
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,100 +37,6 @@ def hash_factor(id_col, d: int, seed: int = 42) -> F.Column:
     of (id, dimension), identical on any layout and replayable in SQL."""
     h = F.xxhash64(F.col(id_col) if isinstance(id_col, str) else id_col, F.lit(d))
     return (F.pmod(h, F.lit(2001)) - F.lit(1000)) / F.lit(2000.0)
-
-
-def _init_factors(ids: DataFrame, id_col: str, rank: int) -> DataFrame:
-    return ids.select(
-        id_col,
-        F.array(*[hash_factor(id_col, d) for d in range(rank)]).alias("vec"),
-    )
-
-
-def _solve_half(
-    ratings: DataFrame,
-    fixed: DataFrame,
-    solve_for: str,
-    fixed_key: str,
-    rank: int,
-    lam: float,
-    broadcast_factors: bool = True,
-) -> DataFrame:
-    """One ALS half-step: given `fixed` factors keyed by fixed_key,
-    return new factors for `solve_for`."""
-    k = rank
-    if broadcast_factors:
-        fixed = F.broadcast(fixed)
-    joined = ratings.join(fixed, fixed_key).select(
-        solve_for,
-        "rating",
-        F.col("vec").alias("fv"),
-    )
-    # b entries (rating * v_d) and the UPPER TRIANGLE of A (v_a * v_b,
-    # a <= b — A is symmetric) as k + k(k+1)/2 flat codegen'd SUM
-    # aggregates: one shuffle with map-side partial combine, zero row
-    # expansion.  (A first cut posexplode'd k + k^2 cells per rating row
-    # — 72x row blowup at rank 8 — and went 85x slower at 10x data;
-    # the flat-aggregate spelling is the scale-correct shape.)
-    tri = [(a, b) for a in range(k) for b in range(a, k)]
-    aggs = [
-        F.sum(F.col("fv")[d] * F.col("rating")).alias(f"b_{d}") for d in range(k)
-    ] + [
-        F.sum(F.col("fv")[a] * F.col("fv")[b]).alias(f"t_{a}_{b}") for a, b in tri
-    ]
-    summed = joined.groupBy(solve_for).agg(*aggs).select(
-        solve_for,
-        F.array(
-            *[F.col(f"b_{d}") for d in range(k)],
-            *[F.col(f"t_{a}_{b}") for a, b in tri],
-        ).alias("ab"),
-    )
-    tri_rows = np.array([a for a, _ in tri])
-    tri_cols = np.array([b for _, b in tri])
-
-    def batch_solve(batches):
-        for pdf in batches:
-            ab = np.stack(pdf["ab"].to_numpy()).astype(np.float64)
-            b = ab[:, :k]
-            A = np.zeros((ab.shape[0], k, k))
-            A[:, tri_rows, tri_cols] = ab[:, k:]
-            A[:, tri_cols, tri_rows] = ab[:, k:]
-            A += lam * np.eye(k)[None, :, :]
-            sol = np.linalg.solve(A, b)  # one batched LAPACK call
-            yield pd.DataFrame({solve_for: pdf[solve_for], "vec": list(map(list, sol))})
-
-    return summed.mapInPandas(
-        batch_solve, schema=f"{solve_for} long, vec array<double>"
-    )
-
-
-def als_fit(
-    ratings: DataFrame,
-    user_col: str = "user",
-    item_col: str = "item",
-    rating_col: str = "rating",
-    rank: int = 8,
-    iterations: int = 5,
-    lam: float = 0.1,
-    broadcast_factors: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Alternating least squares; returns (user_factors, item_factors)
-    as (key, vec array<double>) DataFrames."""
-    r = ratings.select(
-        F.col(user_col).alias("user"),
-        F.col(item_col).alias("item"),
-        F.col(rating_col).cast("double").alias("rating"),
-    ).localCheckpoint(eager=True)  # joined 2x per iteration — never rebuilt
-    items = r.select("item").distinct()
-    item_f = _init_factors(items, "item", rank).localCheckpoint(eager=True)
-    user_f = None
-    for _ in range(iterations):
-        user_f = _solve_half(
-            r, item_f, "user", "item", rank, lam, broadcast_factors
-        ).localCheckpoint(eager=True)
-        item_f = _solve_half(
-            r, user_f, "item", "user", rank, lam, broadcast_factors
-        ).localCheckpoint(eager=True)
-    return user_f, item_f
 
 
 def als_rank1(
@@ -172,7 +58,7 @@ def als_rank1(
     engine-specific FP summation-order drift at each step (which is
     also what makes the broadcast-vs-SMJ join order irrelevant to the
     result).  Same broadcast-join + one-partial-agg-shuffle
-    half-iteration shape as the rank-k path.
+    half-iteration shape as the rank-2 path.
     """
     r = ratings.select(
         F.col(user_col).alias("user"),
@@ -237,10 +123,10 @@ def als_rank2(
     codegen aggregates — no numpy, no LAPACK — so, like the rank-1 twin,
     every half-step is fixed-order arithmetic both engines can replay
     bit-for-bit; the per-half-step ROUND resyncs summation-order drift.
-    The same flat normal-equation aggregates as the rank-k path
+    The flat normal-equation aggregates
     (b_1, b_2, and the upper triangle t11, t12, t22 — five SUMs, one
-    map-side-combinable shuffle per half-step), with the k x k LAPACK
-    batch solve replaced by the explicit 2x2 inverse.
+    map-side-combinable shuffle per half-step), solved by the explicit
+    2x2 inverse.
 
     Returns (user_factors(user, u1, u2), item_factors(item, v1, v2)).
     """

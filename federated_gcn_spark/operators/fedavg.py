@@ -12,14 +12,10 @@ Parameter-table schema (FIXTURES.md §5):
     round INT, client_id STRING, layer INT, shape ARRAY<INT>,
     values ARRAY<DOUBLE>, num_examples BIGINT
 
-Two physical strategies, same semantics:
-- ``fedavg`` (default): posexplode → groupBy(layer, idx) → weighted avg →
-  re-assemble with sort_array(collect_list(struct)). All JVM-side, partial
-  (map-side) aggregation, scales to arbitrarily wide layers because the
-  shuffle key space is (layer × element), never a whole tensor in one row.
-- ``fedavg_arrow``: pandas grouped-agg over ARRAY values — fewer rows
-  moved for *small* models (one row per client per layer), used by the
-  federated trainer where L and W are tiny but clients are many.
+``fedavg``: posexplode → groupBy(layer, idx) → weighted avg → re-assemble
+with sort_array(collect_list(struct)). All JVM-side, partial (map-side)
+aggregation, scales to arbitrarily wide layers because the shuffle key
+space is (layer × element), never a whole tensor in one row.
 
 Element order inside a layer is the array index → aggregation order is
 fixed → float results are reproducible (SURVEY.md §7.3 risk 5).
@@ -28,7 +24,6 @@ fixed → float results are reproducible (SURVEY.md §7.3 risk 5).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -62,26 +57,6 @@ def fedavg(params: DataFrame, weighted: bool = True, group_cols: list[str] | Non
                 F.array_sort(F.collect_list(F.struct("idx", "v"))), lambda s: s["v"]
             ).alias("values"),
         )
-    )
-
-
-def fedavg_arrow(params: DataFrame, weighted: bool = True) -> DataFrame:
-    """Arrow-batched FedAvg: one group per layer, numpy average inside."""
-
-    def avg_layer(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.stack(pdf["values"].to_numpy())
-        w = pdf["num_examples"].to_numpy().astype("float64") if weighted else None
-        avg = np.average(mat, axis=0, weights=w)
-        return pd.DataFrame(
-            {
-                "layer": [int(pdf["layer"].iloc[0])],
-                "shape": [pdf["shape"].iloc[0]],
-                "values": [avg.tolist()],
-            }
-        )
-
-    return params.groupBy("layer").applyInPandas(
-        avg_layer, schema="layer int, shape array<int>, values array<double>"
     )
 
 

@@ -1,77 +1,18 @@
-"""Multimodal (image/audio/video) column operators (driver extension §2.10).
+"""Multimodal (image/audio) column operator (driver extension §2.10).
 
-Design: media are opaque BINARY payloads + a typed metadata struct —
-the parquet-native layout for multimodal training data:
-
-    media(media_id BIGINT, kind STRING, payload BINARY,
-          meta STRUCT<width INT, height INT, channels INT,
-                      sample_rate INT, n_frames INT, format STRING>)
-
-All compute runs as Arrow-batched ``mapInPandas`` — the payload bytes
-stream through in columnar batches, partitioning is whatever the table
-already has, and each operator declares an explicit output schema.
-
-The decode kernel is pluggable: ``decoder=None`` uses a deterministic
-fake (payload-hash-seeded) for plumbing tests; ``decoder="real"``
-decodes real bytes with the dependency-free numpy codecs in
-functions/codecs.py (24-bit BMP → grayscale grid pooling, PCM-16 WAV →
-frame RMS energies — magic-byte dispatch, per-row failure isolation);
-any callable ``decoder(payload) -> np.ndarray`` swaps in a heavyweight
-codec (PIL/ffmpeg) without touching the dataflow.
+``encode_decode_features`` runs as an Arrow-batched ``mapInPandas`` with an
+explicit output schema: each row is encoded to genuine media bytes and
+decoded back with the dependency-free numpy codecs in functions/codecs.py
+(24-bit BMP, PCM-16 WAV — magic-byte dispatch, per-row failure isolation).
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def _fake_pixels(payload: bytes, n: int) -> np.ndarray:
-    """Deterministic stand-in decode: bytes → seeded uniform floats."""
-    seed = int.from_bytes(hashlib.sha256(payload or b"").digest()[:8], "big")
-    return np.random.default_rng(seed).random(n)
-
-
-def image_features(
-    media: DataFrame,
-    n_features: int = 16,
-    decoder=None,
-    batch_hint: int = 256,
-) -> DataFrame:
-    """payload → fixed-width feature vector (decode + feature-extract).
-
-    Output: (media_id, features ARRAY<DOUBLE>, decoded_ok BOOLEAN).
-    Real pipeline shape: the decoder sees raw bytes per row, emits a
-    float vector; Arrow moves the binary column in batches.
-    """
-    if decoder == "real":
-        from federated_gcn_spark.functions.codecs import real_media_features
-
-        decode = lambda payload: real_media_features(payload, n_features)  # noqa: E731
-    else:
-        decode = decoder or (lambda payload: _fake_pixels(payload, n_features))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, ok = [], []
-            for payload in pdf["payload"]:
-                try:
-                    feats.append([float(x) for x in decode(payload)][:n_features])
-                    ok.append(True)
-                except Exception:
-                    feats.append([0.0] * n_features)
-                    ok.append(False)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "features": feats, "decoded_ok": ok}
-            )
-
-    return media.mapInPandas(
-        run, schema="media_id long, features array<double>, decoded_ok boolean"
-    )
 
 
 def encode_decode_features(gen: DataFrame) -> DataFrame:

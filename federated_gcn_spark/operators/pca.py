@@ -14,9 +14,7 @@ element-wise sum of P such rows (P = #partitions), exploded by matrix
 index so the combine is a plain map-side-partial groupBy — the classic
 treeAggregate shape expressed in DataFrame algebra. The eigendecomposition
 runs on the driver on a d x d matrix (micro-seconds; not a distributed
-concern). Projection back onto the top-k components is a broadcast of a
-k x d literal matrix folded in a codegen'd HOF dot product — no Python
-in the projection path.
+concern).
 """
 
 from __future__ import annotations
@@ -82,43 +80,6 @@ def gram_moments(
     mean = s / n
     cov = g / n - np.outer(mean, mean)
     return n, mean, cov
-
-
-def project(
-    df: DataFrame,
-    mean: np.ndarray,
-    components: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pca",
-) -> DataFrame:
-    """Append the k-dim projection (x - mean) @ components^T as an
-    array column. The k x d matrix is folded into literal HOF dot
-    products — whole-stage codegen, no Python, no shuffle."""
-    centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"),
-        F.array(*[F.lit(float(m)) for m in mean]),
-        lambda x, m: x - m,
-    )
-
-    def dots(c):
-        return F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        c,
-                        F.array(*[F.lit(float(w)) for w in row]),
-                        lambda x, w: x * w,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                for row in components
-            ]
-        )
-
-    # bind the centered array once (transform-over-singleton)
-    proj = F.element_at(F.transform(F.array(centered), dots), 1)
-    return df.withColumn(out_col, proj)
 
 
 # ---------------------------------------------------------------------------

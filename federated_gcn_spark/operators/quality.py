@@ -40,8 +40,7 @@ def repetition_stats(
 
     Gopher thresholds for reference: drop when the duplicate-2-gram
     fraction exceeds ~0.2 or the top-2-gram fraction exceeds ~0.18; we
-    return the raw fractions and leave the threshold to the caller
-    (curate_corpus composes them).
+    return the raw fractions and leave the threshold to the caller.
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")

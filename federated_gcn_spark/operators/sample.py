@@ -1,4 +1,4 @@
-"""Deterministic row sampling: uniform hash-fraction and stratified.
+"""Deterministic row sampling: stratified, mixture, k-fold and weighted.
 
 Training-data curation needs *reproducible* subsamples — Spark's
 ``DataFrame.sample`` draws from per-partition RNG streams, so its output
@@ -36,15 +36,6 @@ def uniform_fraction(key: Column | str, seed: int = 42) -> Column:
     return F.pmod(k * LCG_A + LCG_C, F.lit(LCG_M)).cast("double") / F.lit(
         float(LCG_M)
     )
-
-
-def deterministic_sample(
-    df: DataFrame, fraction: float, key_col: str, seed: int = 42
-) -> DataFrame:
-    """Keep rows with u(key) < fraction — same rows on any cluster layout."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return df.where(uniform_fraction(key_col, seed) < fraction)
 
 
 def stratified_sample(
@@ -88,7 +79,7 @@ def mixture_sample(
     The largest corpus satisfying the exact mixture without upsampling
     keeps ``scale = min_d(count_d / share_d)`` total rows; each domain
     keeps ``scale * share_d`` of its rows via the same layout-independent
-    LCG selector as :func:`deterministic_sample`. Domains absent from
+    LCG selector as :func:`stratified_sample`. Domains absent from
     ``target_shares`` are dropped.
 
     Scale shape: one tiny groupBy(domain).count() (categorical key —

@@ -159,8 +159,7 @@ class IVFIndex:
     lists.
 
     At 100 TB the assigned table is written partitioned by
-    ``centroid_id`` so a probe is partition pruning — the same catalog
-    trick as the graph store (catalog.write_graph).
+    ``centroid_id`` so a probe is partition pruning.
     """
 
     def __init__(

@@ -3,9 +3,8 @@
 First line of defense is AQE's runtime skew-join splitting
 (session.RUNTIME_CONFS enables it) — it rewrites skewed sort-merge join
 partitions automatically. This module is the manual fallback for the
-cases AQE does not cover: shuffle-hash joins against a side too big to
-broadcast, and key-grouped operations whose state is non-algebraic
-(collect_list-style) so map-side combine cannot flatten heavy keys.
+case AQE does not cover: shuffle-hash joins against a side too big to
+broadcast.
 """
 
 from __future__ import annotations
@@ -41,29 +40,3 @@ def salted_join(
     )
     return s.join(u, [*on, "__salt"], how).drop("__salt")
 
-
-def salted_collect_list(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    buckets: int = 16,
-    sort_result: bool = True,
-) -> DataFrame:
-    """groupBy(keys).collect_list(value) without a hot reducer per heavy
-    key: partial lists per (keys, salt), then flatten per keys. The
-    optional sort makes the result order deterministic (collect_list is
-    otherwise partitioning-dependent)."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(buckets)).cast("int")
-    )
-    partial = salted.groupBy(*keys, "__salt").agg(
-        F.collect_list(value_col).alias("__part")
-    )
-    merged = partial.groupBy(*keys).agg(
-        F.flatten(F.collect_list("__part")).alias(f"{value_col}_list")
-    )
-    if sort_result:
-        merged = merged.withColumn(
-            f"{value_col}_list", F.array_sort(F.col(f"{value_col}_list"))
-        )
-    return merged

@@ -3,7 +3,7 @@
 These are the reference's *programs* (SURVEY.md §3) re-expressed so that
 one Catalyst plan covers what the reference does with imperative pandas:
 
-- ``merge_pipeline``  = merge.py §3.3: scan 4 store files → project/cast
+- ``merge_pipeline``  = merge.py §3.3: scan 4 store files → select/cast
   → union → keep-first dedup → write 2 outputs.
 - ``concat_embeddings_pipeline`` = concat_embeddings.py: N per-partition
   embedding tables → first-wins merge.
@@ -65,75 +65,3 @@ def concat_embeddings_pipeline(
         merged.write.mode("overwrite").parquet(out_path)
     return merged
 
-
-def curate_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_tokens: int = 8,
-    max_tokens: int = 4096,
-    min_quality: float = 0.5,
-    langs: tuple[str, ...] | None = None,
-    near_dup_jaccard: float | None = 0.8,
-    chunk_size: int = 512,
-    chunk_stride: int = 448,
-    sample_fraction: float = 1.0,
-    seed: int = 42,
-    out_path: str | None = None,
-) -> DataFrame:
-    """The full pretraining-corpus curation pipeline, end to end:
-
-    score → filter (token bounds, quality, optional language whitelist)
-    → exact dedup → optional MinHash-LSH near-dedup (clustered, canonical
-    per component) → overlapping token-window chunking → optional
-    deterministic downsample → optional partitioned parquet sink.
-
-    Every stage before the dedups is a stateless codegen'd expression
-    (pipelines into the scan); the dedups shuffle on fingerprint /
-    LSH-band keys only; chunking is shuffle-free; the sample is a pushed-
-    down filter. Output: (id_col, chunk_id, n_tokens, chunk_text,
-    quality, pred_lang).
-    """
-    from pyspark.sql import functions as F
-
-    from federated_gcn_spark.functions.text import (
-        lang_id,
-        quality_score,
-        token_count,
-    )
-    from federated_gcn_spark.operators.chunk import chunk_documents
-    from federated_gcn_spark.operators.dedup import exact_dedup, near_dedup
-    from federated_gcn_spark.operators.sample import deterministic_sample
-
-    scored = docs.withColumn(
-        "__n_tokens", token_count(text_col).cast("long")
-    ).withColumn("quality", F.round(quality_score(text_col), 6)).withColumn(
-        "pred_lang", lang_id(text_col)
-    )
-    kept = scored.where(
-        F.col("__n_tokens").between(min_tokens, max_tokens)
-        & (F.col("quality") >= min_quality)
-    )
-    if langs is not None:
-        kept = kept.where(F.col("pred_lang").isin(list(langs)))
-    kept = exact_dedup(kept, text_col=text_col, id_col=id_col)
-    if near_dup_jaccard is not None:
-        kept = near_dedup(
-            kept, text_col=text_col, id_col=id_col,
-            jaccard_threshold=near_dup_jaccard, seed=seed,
-        ).drop("cluster_id")
-    # stage the surviving doc set once: both the chunker and the metadata
-    # join consume it, and near-dedup's plan (LSH join + components) should
-    # not be recomputed per consumer
-    kept = kept.localCheckpoint(eager=True)
-    chunks = chunk_documents(
-        kept, text_col=text_col, id_col=id_col, size=chunk_size, stride=chunk_stride
-    )
-    out = chunks.join(
-        kept.select(id_col, "quality", "pred_lang"), id_col
-    )
-    if sample_fraction < 1.0:
-        out = deterministic_sample(out, sample_fraction, key_col=id_col, seed=seed)
-    if out_path:
-        out.write.mode("overwrite").partitionBy("pred_lang").parquet(out_path)
-    return out

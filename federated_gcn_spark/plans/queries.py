@@ -2541,8 +2541,7 @@ def bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def orders_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered array aggregation (collect_list + array_sort): the sorted
     output makes the result partitioning-independent — bare collect_list
-    is not deterministic under shuffle (and for genuinely skewed keys
-    operators/skew.py:salted_collect_list is the two-level variant).
+    is not deterministic under shuffle.
     The array is emitted comma-joined (same spelling as postings_index)
     because the correctness harness hashes cells — ARRAY cells are
     unhashable there; the array form itself is unit-tested in
@@ -3162,7 +3161,7 @@ def domain_mixture_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, so the fact side stays a single codegen'd filter pass."""
     from federated_gcn_spark.operators.sample import mixture_sample
 
-    # project to the two columns the sampler and the emit need, staged
+    # select the two columns the sampler and the emit need, staged
     # once: mixture_sample consumes its input twice (domain tally +
     # fact filter)
     docs = (

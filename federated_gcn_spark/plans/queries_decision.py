@@ -151,7 +151,7 @@ def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the quarter filter is pushed into the orders scan; the
     semi join shuffles on orderkey (the natural co-key — bucketing both
-    facts by orderkey removes even that, `catalog.write_bucketed`);
+    facts by orderkey would remove even that);
     lineitem carries only (orderkey, shipdate) through the exchange.
     The final groupBy has ~5 groups — map-side partials make it free.
     """

@@ -842,7 +842,7 @@ def _als_rank1_oracle(iterations: int = 3, lam: float = 0.1, rd: int = 4) -> str
 def als_rank1_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-1 ALS (operators/als.py:als_rank1) on the implicit
     customer x part quantity matrix, 3 alternating closed-form
-    half-steps — the hash-replayable twin of the rank-k path, checked
+    half-steps — hash-replayable, checked
     factor-for-factor against a DuckDB unrolled recursion.  Exercises
     the full alternating join/agg iteration shape of the factorizer."""
     from federated_gcn_spark.operators.als import als_rank1
@@ -947,11 +947,9 @@ def als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALS factorization (operators/als.py:als_rank2 — Cramer closed-form
     2x2 solves as pure codegen aggregates), hash-checked end-to-end:
     the oracle unrolls both alternating half-steps AND the top-k
-    serving join (converted from rows-only per the round-3 verdict; the
-    rank-8 LAPACK path remains in als_fit, pinned against dense numpy
-    ALS in test_als.py and machinery-checked by als_rank1_factors).
+    serving join (converted from rows-only per the round-3 verdict).
 
-    100 TB shape: identical to the rank-k path — two flat-aggregate
+    100 TB shape: two flat-aggregate
     shuffles per half-step, factors move while ratings stay put, item
     factors broadcast at serving, per-user top-k as a user-partitioned
     window over the broadcast join."""

@@ -27,7 +27,7 @@ Reference anchor: SURVEY.md §2.11 metrics family + §2.10 curation
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from federated_gcn_spark.catalog import load_table

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from federated_gcn_spark.catalog import load_table
-from federated_gcn_spark.plans.queries import _event_epoch_sec, register
+from federated_gcn_spark.plans.queries import register
 
 
 # ---------------------------------------------------------------------------

@@ -23,8 +23,7 @@ Cross-engine determinism: row hashes replay Spark's xxhash64 exactly
 integer; ratios are single fixed expressions.
 
 Reference anchor: SURVEY.md §2.1 sources/sinks (the integrity side);
-pairs with zorder_curve_sample / compact_parquet (catalog.py) and
-join_key_skew_report.
+pairs with zorder_curve_sample and join_key_skew_report.
 """
 
 from __future__ import annotations

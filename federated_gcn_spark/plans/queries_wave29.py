@@ -2,11 +2,11 @@
 projection, the hashing trick, encoding hygiene, and cross-split
 n-gram novelty.
 
-- ``jl_projection_fidelity``: project the 64-d embeddings to 16-d with
+- ``jl_projection_fidelity``: map the 64-d embeddings to 16-d with
   a +-1 Rademacher matrix (seeded portable LCG, committed literals —
   the Achlioptas/JL construction) and report how well pairwise
   squared distances survive (mean/min/max of the per-pair distortion
-  ratio) — the measured check behind every "project first, then
+  ratio) — the measured check behind every "reduce first, then
   cluster" decision at 100 TB.
 - ``feature_hash_collisions``: the hashing trick audit — bucket the
   corpus vocabulary into 4096 slots by xxhash64 and report load,
@@ -42,7 +42,6 @@ from federated_gcn_spark.plans.queries import register
 from federated_gcn_spark.plans.xxh64_sql import (
     hash_string_sql,
     pmod_sql,
-    to_signed64,
 )
 
 _JL_K, _JL_D = 16, 64
@@ -109,7 +108,7 @@ def _jl_oracle() -> str:
 
 @register("jl_projection_fidelity", _jl_oracle())
 def jl_projection_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson-Lindenstrauss check: project embeddings 64 -> 16 dims
+    """Johnson-Lindenstrauss check: map embeddings 64 -> 16 dims
     with a committed +-1 Rademacher matrix and measure the pairwise
     squared-distance distortion ratio ||ya-yb||^2 / (k * ||xa-xb||^2)
     (each +-1 component has variance ||x||^2, so 1/k is the unbiased

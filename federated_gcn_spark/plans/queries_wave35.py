@@ -28,7 +28,7 @@ contingency_association, ks_two_sample_price.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from federated_gcn_spark.catalog import load_table

@@ -576,7 +576,7 @@ def power_iteration_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform("u", lambda x: x / F.col("mx")).alias("v"),
         )
     # checkpoint before Generate: posexplode over the chained matvec plan
-    # sends the optimizer's project-substitution super-linear (measured
+    # sends the optimizer's Project-substitution super-linear (measured
     # hang); over the materialized 1-row state it is instant
     state = state.localCheckpoint(eager=True)
     final = state.select(

@@ -26,7 +26,7 @@ from federated_gcn_spark.barrier import (
 from federated_gcn_spark.graph import Graph
 from federated_gcn_spark.graph.bfs import bfs_distances
 from federated_gcn_spark.graph.components import connected_components
-from federated_gcn_spark.graph.kcore import core_numbers, k_core
+from federated_gcn_spark.graph.kcore import core_numbers
 from federated_gcn_spark.graph.pagerank import pagerank
 from federated_gcn_spark.graph.split import spanning_forest
 
@@ -248,7 +248,6 @@ def test_capped_components_raise_not_converged(spark):
     [
         ("graph.kcore.core_numbers",
          lambda g: core_numbers(g, max_iterations=1)),
-        ("graph.kcore.k_core", lambda g: k_core(g, 2, max_iterations=1)),
         ("graph.bfs.bfs_distances", lambda g: bfs_distances(g, 0, max_hops=2)),
         ("graph.split.spanning_forest", lambda g: spanning_forest(g, max_rounds=1)),
     ],

@@ -3,11 +3,7 @@
 import numpy as np
 import pytest
 
-from federated_gcn_spark.operators.fedavg import (
-    fedavg,
-    fedavg_arrow,
-    rows_to_weights,
-)
+from federated_gcn_spark.operators.fedavg import fedavg, rows_to_weights
 
 
 def _weights_to_rows(weights, client_id="driver", num_examples=1):
@@ -60,13 +56,6 @@ def test_fedavg_of_identical_tensors_is_identity(spark):
     out = rows_to_weights([r.asDict() for r in fedavg(df).collect()])
     for got, want in zip(out, w):
         np.testing.assert_allclose(got, want)
-
-
-def test_arrow_variant_matches_explode_variant(spark, two_clients):
-    a = rows_to_weights([r.asDict() for r in fedavg(two_clients).collect()])
-    b = rows_to_weights([r.asDict() for r in fedavg_arrow(two_clients).collect()])
-    for x, y in zip(a, b):
-        np.testing.assert_allclose(x, y)
 
 
 def test_codec_roundtrip(spark):

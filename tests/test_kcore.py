@@ -3,10 +3,9 @@
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from federated_gcn_spark.graph import Graph
-from federated_gcn_spark.graph.kcore import core_numbers, k_core
+from federated_gcn_spark.graph.kcore import core_numbers
 from federated_gcn_spark.graph.labelprop import label_propagation
 
 
@@ -50,24 +49,6 @@ def test_core_numbers_match_peeling(spark, seed):
         r["id"]: r["coreness"]
         for r in core_numbers(Graph.from_edges(df)).collect()
     }
-    assert got == want
-
-
-def test_k_core_subgraph_every_vertex_meets_degree(spark):
-    edges = _random_edges(50, 160, 3)
-    df = spark.createDataFrame(edges, "src long, dst long")
-    sub = k_core(Graph.from_edges(df), k=3)
-    degs = (
-        sub.symmetrized_edges()
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.countDistinct("dst").alias("d"))
-        .collect()
-    )
-    assert len(degs) > 0
-    assert all(r["d"] >= 3 for r in degs)
-    # parity with coreness: the k-core vertex set == {v : coreness >= k}
-    want = {v for v, c in _py_coreness(edges).items() if c >= 3}
-    got = {r["id"] for r in sub.vertices.collect()}
     assert got == want
 
 

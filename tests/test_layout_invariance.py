@@ -15,7 +15,6 @@ from federated_gcn_spark.graph.graph import Graph
 from federated_gcn_spark.graph.sampling import fanout_sample, uniform_random_walks
 from federated_gcn_spark.graph.split import connectivity_preserving_split
 from federated_gcn_spark.operators.dedup import minhash_lsh_pairs
-from federated_gcn_spark.operators.sample import deterministic_sample
 
 
 @pytest.fixture()
@@ -91,17 +90,3 @@ def test_minhash_pairs_layout_invariant(spark, with_partitions):
         )
 
     assert with_partitions(2, run) == with_partitions(7, run)
-
-
-def test_deterministic_sample_layout_invariant(spark, with_partitions):
-    df = spark.range(500).selectExpr("id AS k")
-
-    def run(parts):
-        return sorted(
-            r["k"]
-            for r in deterministic_sample(
-                df.repartition(parts), 0.25, "k", seed=3
-            ).collect()
-        )
-
-    assert with_partitions(3, lambda: run(2)) == with_partitions(8, lambda: run(17))

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from federated_gcn_spark.operators.pca import gram_moments, project
+from federated_gcn_spark.operators.pca import gram_moments
 
 
 @pytest.fixture(scope="module")
@@ -26,19 +26,6 @@ def test_gram_moments_match_numpy(spark, emb_df):
     assert n == 300
     np.testing.assert_allclose(mean, X.mean(0), atol=1e-9)
     np.testing.assert_allclose(cov, np.cov(X.T, bias=True), atol=1e-9)
-
-
-def test_projection_matches_numpy(spark, emb_df):
-    M = _np_matrix(emb_df)
-    mean = M.mean(0)
-    evals, evecs = np.linalg.eigh(np.cov(M.T, bias=True))
-    comps = evecs[:, np.argsort(evals)[::-1][:3]].T
-    X = {r.vec_id: np.array(r.embedding) for r in emb_df.collect()}
-    out = project(emb_df, mean, comps).select("vec_id", "pca").collect()
-    for r in out[:50]:
-        np.testing.assert_allclose(
-            np.array(r.pca), comps @ (X[r.vec_id] - mean), atol=1e-9
-        )
 
 
 def test_pca_layout_invariant(spark, emb_df):

@@ -1,11 +1,9 @@
-"""Deterministic uniform/stratified sampling (operators/sample.py)."""
+"""Deterministic stratified, k-fold and weighted sampling
+(operators/sample.py)."""
 
 import pytest
 
-from federated_gcn_spark.operators.sample import (
-    deterministic_sample,
-    stratified_sample,
-)
+from federated_gcn_spark.operators.sample import stratified_sample
 
 
 def _table(spark, n=2000):
@@ -14,24 +12,28 @@ def _table(spark, n=2000):
     )
 
 
+def _sample(df, fraction, seed=42):
+    """The same keep-fraction in every stratum."""
+    return stratified_sample(
+        df, "lang", {s: fraction for s in ("en", "de", "fr")}, key_col="k", seed=seed
+    )
+
+
 def test_sample_layout_independent(spark):
     df = _table(spark)
-    a = sorted(r["k"] for r in deterministic_sample(df, 0.3, "k", seed=7).collect())
-    b = sorted(
-        r["k"]
-        for r in deterministic_sample(df.repartition(13, "lang"), 0.3, "k", seed=7).collect()
-    )
+    a = sorted(r["k"] for r in _sample(df, 0.3, seed=7).collect())
+    b = sorted(r["k"] for r in _sample(df.repartition(13, "lang"), 0.3, seed=7).collect())
     assert a == b and len(a) > 0
 
 
 def test_sample_fraction_roughly_respected_and_seed_sensitive(spark):
     df = _table(spark, 5000)
-    n = deterministic_sample(df, 0.3, "k", seed=7).count()
+    n = _sample(df, 0.3, seed=7).count()
     assert 0.25 * 5000 < n < 0.35 * 5000
-    other = sorted(r["k"] for r in deterministic_sample(df, 0.3, "k", seed=8).collect())
-    assert other != sorted(r["k"] for r in deterministic_sample(df, 0.3, "k", seed=7).collect())
-    assert deterministic_sample(df, 0.0, "k").count() == 0
-    assert deterministic_sample(df, 1.0, "k").count() == 5000
+    other = sorted(r["k"] for r in _sample(df, 0.3, seed=8).collect())
+    assert other != sorted(r["k"] for r in _sample(df, 0.3, seed=7).collect())
+    assert _sample(df, 0.0).count() == 0
+    assert _sample(df, 1.0).count() == 5000
 
 
 def test_stratified_fractions_per_stratum(spark):
@@ -56,8 +58,8 @@ def test_sample_fractions_nest(spark):
     """u(key) < f thresholds nest: the 20% sample is a subset of the 30%
     sample — stable incremental growth, unlike per-partition RNG sampling."""
     df = _table(spark, 3000)
-    small = {r["k"] for r in deterministic_sample(df, 0.2, "k", seed=5).collect()}
-    big = {r["k"] for r in deterministic_sample(df, 0.3, "k", seed=5).collect()}
+    small = {r["k"] for r in _sample(df, 0.2, seed=5).collect()}
+    big = {r["k"] for r in _sample(df, 0.3, seed=5).collect()}
     assert small < big
 
 

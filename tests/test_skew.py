@@ -1,9 +1,9 @@
-"""Salted-join / salted-collect equivalence under heavy key skew."""
+"""Salted-join equivalence under heavy key skew."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from federated_gcn_spark.operators.skew import salted_collect_list, salted_join
+from federated_gcn_spark.operators.skew import salted_join
 
 
 @pytest.fixture(scope="module")
@@ -32,12 +32,3 @@ def test_salted_join_outer(spark, skewed_df):
         F.col("d").isNull()
     )
     assert plain.count() == salted.count() == 11  # keys 40..50
-
-
-def test_salted_collect_list(spark, skewed_df):
-    got = {
-        r["k"]: r["v_list"]
-        for r in salted_collect_list(skewed_df, ["k"], "v", buckets=8).collect()
-    }
-    assert got[0] == sorted(range(5000))
-    assert got[7] == [70]

@@ -108,70 +108,3 @@ def test_concat_embeddings_pipeline(spark, tmp_path):
     merged = concat_embeddings_pipeline([p0, p1], out_path=out)
     assert merged.count() == 3
     assert spark.read.parquet(out).count() == 3
-
-
-def test_curate_corpus_end_to_end(spark, tmp_path):
-    """Full curation pipeline: junk filtered, exact + near dups collapsed,
-    survivors chunked with overlap, metadata joined, parquet written
-    partitioned by language."""
-    from federated_gcn_spark.plans.pipelines import curate_corpus
-
-    base = (
-        "the quick brown fox jumps over the lazy dog and runs into the green "
-        "hills to find a quiet place for a long afternoon nap in the sun"
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, base),                                   # survivor
-            (2, base),                                   # exact dup of 1
-            (3, base.replace("nap", "rest")),            # near dup of 1
-            (4, "short junk"),                           # too few tokens
-            (5, "der hund und die katze, das ist gut und der tag ist lang und die "
-                "sonne ist hell und das wetter ist warm und alles ist gut heute"),
-        ],
-        "doc_id long, text string",
-    )
-    out_path = str(tmp_path / "curated")
-    out = curate_corpus(
-        docs, min_tokens=5, min_quality=0.3, near_dup_jaccard=0.5,
-        chunk_size=16, chunk_stride=12, out_path=out_path,
-    )
-    rows = out.collect()
-    kept_docs = {r["doc_id"] for r in rows}
-    assert kept_docs == {1, 5}  # 2 exact-dup, 3 near-dup, 4 junk
-    # doc 1 has 28 tokens → chunks start at 0, 12, 24 with the tail partial
-    d1 = sorted(
-        (r["chunk_id"], r["n_tokens"]) for r in rows if r["doc_id"] == 1
-    )
-    assert d1 == [(0, 16), (1, 16), (2, 4)]
-    langs = {r["doc_id"]: r["pred_lang"] for r in rows}
-    assert langs[1] == "en" and langs[5] == "de"
-    # the sink is partitioned by language
-    import os
-
-    assert os.path.isdir(os.path.join(out_path, "pred_lang=en"))
-    reread = spark.read.parquet(out_path)
-    assert reread.count() == len(rows)
-
-
-def test_curate_corpus_sampling_is_doc_level(spark):
-    from federated_gcn_spark.plans.pipelines import curate_corpus
-
-    text = "plain words that make a reasonably long and ordinary document " * 3
-    docs = spark.createDataFrame(
-        [(i, f"{text} marker {i}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    out = curate_corpus(
-        docs, min_tokens=5, min_quality=0.0, near_dup_jaccard=None,
-        chunk_size=8, chunk_stride=8, sample_fraction=0.4, seed=11,
-    )
-    rows = out.collect()
-    sampled_docs = {r["doc_id"] for r in rows}
-    assert 0 < len(sampled_docs) < 40
-    # sampling keeps or drops whole documents: every surviving doc has its
-    # complete chunk set (9 words × 3 + marker + id = 29 tokens → 4 chunks)
-    from collections import Counter
-
-    per_doc = Counter(r["doc_id"] for r in rows)
-    assert all(c == 4 for c in per_doc.values())
